@@ -27,20 +27,8 @@ object AdmitBench {
     // per-stage attribution for scale runs, same env gate as
     // BuildCorpus: SPARK_GRAFT_STAGE_MIN=<secs> prints every stage
     // over the floor (streaming foreachBatch stages included)
-    sys.env.get("SPARK_GRAFT_STAGE_MIN").map(_.toDouble).foreach { minStage =>
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val si = sc.stageInfo
-          for (sub <- si.submissionTime; end <- si.completionTime) {
-            val dur = (end - sub) / 1000.0
-            if (dur > minStage)
-              println(f"[stage] id=${si.stageId} tasks=${si.numTasks} time=$dur%.2fs " +
-                si.name.takeWhile(_ != '\n').take(80))
-          }
-        }
-      })
-    }
+    sys.env.get("SPARK_GRAFT_STAGE_MIN").map(_.toDouble)
+      .foreach(Dbg.printStagesOver(spark, _))
     // recentProgress retains 100 entries by default — a silent cap
     // that would undercount rows/batches past 100 triggers
     spark.conf.set("spark.sql.streaming.numRecentProgressUpdates",

@@ -15,6 +15,21 @@ object Dbg {
     val runs = if (args.length > 2) args(2).toInt else 1
     val minStage = sys.env.getOrElse("SPARK_GRAFT_STAGE_MIN", "1.0").toDouble
     val spark = GraftSession.local(Runtime.getRuntime.availableProcessors)
+    printStagesOver(spark, minStage)
+    val q = SparkEntry.all.find(_.name == name)
+      .getOrElse(sys.error(s"unknown query $name"))
+    for (r <- 1 to runs) {
+      val t0 = System.nanoTime()
+      q.fn(spark, dir).write.format("noop").mode("overwrite").save()
+      println(f"[dbg] $name run=$r time=${(System.nanoTime() - t0) / 1e9}%.1fs")
+    }
+    spark.stop()
+  }
+
+  /** Prints every completed stage slower than `minStage` seconds (id,
+    * task count, wall time, call site) — the one stage listener the
+    * profiling mains share. */
+  def printStagesOver(spark: org.apache.spark.sql.SparkSession, minStage: Double): Unit =
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onStageCompleted(
           sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
@@ -25,17 +40,9 @@ object Dbg {
         for (sub <- si.submissionTime; end <- si.completionTime) {
           val dur = (end - sub) / 1000.0
           if (dur > minStage)
-            println(f"[stage] id=${si.stageId} tasks=${si.numTasks} time=$dur%.2fs ${si.name.takeWhile(_ != '\n').take(60)}")
+            println(f"[stage] id=${si.stageId} tasks=${si.numTasks} time=$dur%.2fs " +
+              si.name.takeWhile(_ != '\n').take(80))
         }
       }
     })
-    val q = SparkEntry.all.find(_.name == name)
-      .getOrElse(sys.error(s"unknown query $name"))
-    for (r <- 1 to runs) {
-      val t0 = System.nanoTime()
-      q.fn(spark, dir).write.format("noop").mode("overwrite").save()
-      println(f"[dbg] $name run=$r time=${(System.nanoTime() - t0) / 1e9}%.1fs")
-    }
-    spark.stop()
-  }
 }

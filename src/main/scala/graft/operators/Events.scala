@@ -351,9 +351,12 @@ object Events {
     val nullBranch = ev
       .filter(col("user_id").isNull && col("event_type") === "view")
       .limit(1).agg(count(lit(1L)).as("nv_null"))
+    // an intake with no non-NULL user sums over an empty grouped set:
+    // NULL, where the oracle's count(*) over an empty CTE reads 0
+    def orZero(c: String) = coalesce(col(c), lit(0L))
     counts.join(nullBranch, lit(true), "left")
-      .select((col("nv0") + coalesce(col("nv_null"), lit(0L))).as("nv"),
-        col("nc"), col("np"))
+      .select((orZero("nv0") + orZero("nv_null")).as("nv"),
+        orZero("nc").as("nc"), orZero("np").as("np"))
       .select(explode(array(
         struct(lit("1_view").as("stage"), col("nv").as("users")),
         struct(lit("2_click").as("stage"), col("nc").as("users")),

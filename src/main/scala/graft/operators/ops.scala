@@ -65,129 +65,71 @@ object ops {
     b.join(r, Seq(key, "_salt")).drop("_salt")
   }
 
-  /** Exact distributed `ntile(k)` over a global ordering, without the
-    * single-partition window `ntile().over(Window.orderBy(...))`
-    * degenerates to. Plan shape:
+  /** Exact ranged prefix aggregates: the ONE two-phase core behind
+    * every global rank, cumulative sum and ntile below, so none of them
+    * degenerates to `Window.orderBy(...)` (one task for the whole
+    * frame) or `Window.partitionBy(grp)` (one task per group).
     *
-    *  1. `repartitionByRange` on the sort key — ranges are globally
-    *     ordered, so partition p holds ranks (offset_p, offset_p+cnt_p].
-    *  2. `row_number` within each range partition (parallel window
-    *     keyed by `spark_partition_id`).
-    *  3. A numShufflePartitions-row offset table (cumulative counts)
-    *     broadcast back, giving every row its exact global rank.
-    *  4. SQL-standard ntile arithmetic: first n%k buckets get
-    *     floor(n/k)+1 rows, the rest floor(n/k).
+    *  1. Range-partition on (grp, sort…): each group's rows lie in
+    *     order across contiguous partitions.
+    *  2. Per-(partition, group) partial aggregates → exclusive offsets
+    *     and optional group totals, windows over a tiny frame (≤ nPart
+    *     + #groups rows) broadcast back.
+    *  3. Local running aggregate per (partition, group) + offset.
     *
-    * Both data-sized shuffles are fully parallel; the only global sort
-    * is over the tiny offset table. `sort` must be a strict total
-    * order (include a unique tiebreaker) so ranks are well-defined
-    * independent of range boundaries.
+    * Each `aggs` entry is (additive aggregate, out, optional total
+    * out). The local frame is the default RANGE one, so `sort` must be
+    * a strict total order within the group (ties would merge); `grp`
+    * must be bounded-cardinality (the broadcast). Output: `grp` (the
+    * join key), the other input columns, totals, prefixes.
     *
-    * The ranged frame is `localCheckpoint`ed: RangePartitioner
+    * The ranged frame is checkpointed locally: RangePartitioner
     * boundaries come from sampling seeded per execution, and the
-    * offset table and the ranked rows MUST see the same boundaries —
-    * relying on exchange reuse to dedupe the two consumers would make
-    * correctness depend on an optimizer heuristic. The checkpoint
-    * materializes only the slim input projection; losing a block
-    * fails the job (correct-or-fail, never silently wrong).
-    */
-  /** Exact PER-GROUP global rank (dense 1..n_g within each group)
-    * without `row_number().over(Window.partitionBy(grp))` — which at
-    * scale funnels an entire group (e.g. one market segment's 10⁹
-    * customers) through one task. Same two-phase shape as
-    * [[globalNtile]]: range-partition on (grp, sort...) so each
-    * group's rows are globally ordered across contiguous partitions,
-    * rank locally per (partition, group), then add per-(partition,
-    * group) offsets computed over the tiny counts frame (≤ nPart +
-    * #groups rows — `grp` must be a bounded-cardinality dimension for
-    * the broadcast; high-cardinality keys don't need this machinery,
-    * a plain window already parallelizes on them). The ranged frame is
-    * localCheckpointed for the same reason as globalNtile: the offset
-    * table and the ranked rows must observe identical
-    * (seeded-per-execution) range boundaries. `sort` must be a strict
-    * total order within the group. */
-  def groupedGlobalRank(df: DataFrame, grp: String, out: String, sort: Column*): DataFrame = {
+    * offset table and the ranked rows MUST see the same boundaries;
+    * exchange reuse would make correctness depend on an optimizer
+    * heuristic. Losing a checkpoint block fails the job
+    * (correct-or-fail, never silently wrong). */
+  private def rangedPrefix(df: DataFrame, grp: String,
+      aggs: Seq[(Column, String, Option[String])], sort: Seq[Column]): DataFrame = {
     val nPart = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val ranged = df.repartitionByRange(nPart, (col(grp) +: sort): _*)
       .withColumn("_pid", spark_partition_id())
       .localCheckpoint(false)
-    val counts = ranged.groupBy(col("_pid"), col(grp)).agg(count(lit(1)).as("_cnt"))
-    val offs = counts
-      .withColumn("_off", coalesce(sum("_cnt").over(
-        Window.partitionBy(grp).orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("_pid"), col(grp), col("_off"))
-    ranged
-      .withColumn("_lrn", row_number().over(
-        Window.partitionBy(col("_pid"), col(grp)).orderBy(sort: _*)))
-      .join(broadcast(offs), Seq("_pid", grp))
-      .withColumn(out, col("_lrn").cast("long") + col("_off"))
-      .drop("_pid", "_lrn", "_off")
+    val ix = aggs.indices
+    val parts = ranged.groupBy(col("_pid"), col(grp))
+      .agg(aggs.head._1.as("_s0"), ix.tail.map(i => aggs(i)._1.as(s"_s$i")): _*)
+    val wOff = Window.partitionBy(grp).orderBy("_pid")
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val offs = parts.select(col("_pid") +: col(grp) +:
+      (ix.map(i => coalesce(sum(s"_s$i").over(wOff), lit(0L)).as(s"_off$i")) ++
+        ix.flatMap(i => aggs(i)._3.map(sum(s"_s$i").over(Window.partitionBy(grp)).as(_)))): _*)
+    val wLoc = Window.partitionBy(col("_pid"), col(grp)).orderBy(sort: _*)
+    val local = ranged.select(col("*") +: ix.map(i => aggs(i)._1.over(wLoc).as(s"_loc$i")): _*)
+    ix.foldLeft(local.join(broadcast(offs), Seq("_pid", grp))) { (f, i) =>
+      f.withColumn(aggs(i)._2, col(s"_loc$i") + col(s"_off$i"))
+    }.drop("_pid" +: ix.flatMap(i => Seq(s"_loc$i", s"_off$i")): _*)
   }
 
-  /** Per-GROUP global cumulative SUM without a #groups-partition
-    * window — [[groupedGlobalRank]]'s additive sibling (the q123
-    * percentile-histogram shape: a window partitioned by a handful
-    * of brands caps parallelism at #groups and sorts each group's
-    * full histogram in one task). Range partition on (grp, sort…),
-    * local cumulative sum per (partition, group), broadcast
-    * per-(partition, group) value-sum offsets; the group TOTAL rides
-    * along as `totOut` for free (same tiny offsets frame). The
-    * ranged frame is localCheckpointed: two consumers AND
-    * RangePartitioner sampling is seeded per execution. Requires
-    * sort keys unique within a group (ties would merge under RANGE
-    * window semantics), which a grouped histogram satisfies by
-    * construction. */
+  /** Exact per-group global rank (1..n_g within each group): the
+    * running count of [[rangedPrefix]]. `count`, not `sum(1)`, keeps
+    * the rank column non-null. */
+  def groupedGlobalRank(df: DataFrame, grp: String, out: String, sort: Column*): DataFrame =
+    rangedPrefix(df, grp, Seq((count(lit(1)), out, None)), sort)
+
+  /** Per-group cumulative sum of `value` plus the group total (q123). */
   def groupedGlobalCumsum(df: DataFrame, grp: String, value: Column, out: String,
       totOut: String, sort: Column*): DataFrame =
     groupedGlobalCumsumN(df, grp, Seq((value, out, Some(totOut))), sort: _*)
 
-  /** N-value [[groupedGlobalCumsum]]: several exact cumulative sums
-    * over ONE range partitioning / ONE checkpoint (q174 needs both
-    * cum_docs and cum_uq — two single-value calls would pay the
-    * seeded-range checkpoint twice). Each entry is (value, cumOut,
-    * optional group-total out). */
+  /** N-value [[groupedGlobalCumsum]] over ONE range partitioning and
+    * ONE checkpoint (q174 needs cum_docs and cum_uq). Each entry is
+    * (value, cumOut, optional group-total out). */
   def groupedGlobalCumsumN(df: DataFrame, grp: String,
-      vals: Seq[(Column, String, Option[String])], sort: Column*): DataFrame = {
-    val nPart = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val ranged = df.repartitionByRange(nPart, (col(grp) +: sort): _*)
-      .withColumn("_pid", spark_partition_id())
-      .localCheckpoint(false)
-    val parts = ranged.groupBy(col("_pid"), col(grp)).agg(
-      sum(vals.head._1).as("_s0"),
-      vals.tail.zipWithIndex.map { case ((v, _, _), i) => sum(v).as(s"_s${i + 1}") }: _*)
-    val wOff = Window.partitionBy(grp).orderBy("_pid")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs0 = vals.indices.foldLeft(parts) { (f, i) =>
-      val withOff = f.withColumn(s"_off$i", coalesce(sum(s"_s$i").over(wOff), lit(0L)))
-      vals(i)._3 match {
-        case Some(t) => withOff.withColumn(t, sum(s"_s$i").over(Window.partitionBy(grp)))
-        case None    => withOff
-      }
-    }
-    val offs = offs0.select((col("_pid") +: col(grp) +:
-      (vals.indices.map(i => col(s"_off$i")) ++
-        vals.flatMap(_._3).map(col))): _*)
-    val wLoc = Window.partitionBy(col("_pid"), col(grp)).orderBy(sort: _*)
-    val local = vals.zipWithIndex.foldLeft(ranged) { case (f, ((v, _, _), i)) =>
-      f.withColumn(s"_lcs$i", sum(v).over(wLoc))
-    }
-    val joined = local.join(broadcast(offs), Seq("_pid", grp))
-    vals.zipWithIndex.foldLeft(joined) { case (f, ((_, out, _), i)) =>
-      f.withColumn(out, col(s"_lcs$i") + col(s"_off$i"))
-    }.drop("_pid" +: (vals.indices.flatMap(i => Seq(s"_lcs$i", s"_off$i"))): _*)
-  }
+      vals: Seq[(Column, String, Option[String])], sort: Column*): DataFrame =
+    rangedPrefix(df, grp, vals.map { case (v, o, t) => (sum(v), o, t) }, sort)
 
-  /** Ungrouped [[groupedGlobalCumsum]]: exact cumulative sum over a
-    * global total order without the `Window.orderBy(...)` form's
-    * single-partition exchange — the domain-histogram selection
-    * shape (q123's core) shared by the percentile selections in
-    * q125/q141/q145/q148. The histogram frames these run over are
-    * domain-bounded (days, depths, dfs — tiny TODAY), but the shape
-    * is what survives a corpus whose domain isn't: unify on the
-    * parallel core instead of keeping a one-task sort around just
-    * because the current inputs are small. Implemented as the
-    * grouped core over one constant group; the helper group column
-    * never reaches the output. */
+  /** Ungrouped [[groupedGlobalCumsum]] over one constant group
+    * (q125/q141/q145/q148's percentile selections). */
   def globalCumsum(df: DataFrame, value: Column, out: String, totOut: String,
       sort: Column*): DataFrame =
     groupedGlobalCumsum(df.withColumn("_g", lit(1)), "_g", value, out, totOut, sort: _*)
@@ -199,63 +141,21 @@ object ops {
     groupedGlobalCumsumN(df.withColumn("_g", lit(1)), "_g", vals, sort: _*)
       .drop("_g")
 
-  def globalNtile(df: DataFrame, k: Int, out: String, sort: Column*): DataFrame = {
-    val nPart = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val ranged = df.repartitionByRange(nPart, sort: _*)
-      .withColumn("_pid", spark_partition_id())
-      .localCheckpoint(false)
-    val counts = ranged.groupBy("_pid").agg(count(lit(1)).as("_cnt"))
-    val offs = counts
-      .withColumn("_off", coalesce(sum("_cnt").over(
-        Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .crossJoin(counts.agg(sum("_cnt").as("_n")))
-      .select("_pid", "_off", "_n")
-    val local = ranged.withColumn("_lrn",
-      row_number().over(Window.partitionBy("_pid").orderBy(sort: _*)))
-    local.join(broadcast(offs), "_pid")
-      .withColumn("_rn", col("_lrn") + col("_off"))
-      .withColumn(out, expr(ntileCase(k)))
-      .drop("_pid", "_lrn", "_off", "_n", "_rn")
-  }
+  /** Exact global `ntile(k)`: [[groupedGlobalNtile]], one group. */
+  def globalNtile(df: DataFrame, k: Int, out: String, sort: Column*): DataFrame =
+    groupedGlobalNtile(df.withColumn("_g", lit(1)), "_g", k, out, sort: _*).drop("_g")
 
-  /** Exact SQL ntile(k) semantics over a global rank `_rn` of `_n`
-    * rows (first `_n % k` buckets one row larger) — the ONE formula
-    * shared by [[globalNtile]] and [[groupedGlobalNtile]]. */
-  private def ntileCase(k: Int): String =
-    s"""CASE WHEN _rn <= (_n % $k) * (_n div $k + 1)
-             THEN CAST((_rn - 1) div (_n div $k + 1) + 1 AS INT)
-             ELSE CAST((_n % $k) + (_rn - (_n % $k) * (_n div $k + 1) - 1) div (_n div $k) + 1 AS INT)
-        END"""
-
-  /** Per-GROUP exact ntile(k) over ONE range partitioning — the
-    * [[groupedGlobalRank]] machinery with the per-group total riding
-    * the same tiny offsets frame (the groupedGlobalCumsum totOut
-    * pattern). N independent [[globalNtile]] calls over the same
-    * table pay N seeded-range exchanges + N checkpoints + N offset
-    * broadcasts; melting the metrics into (key, grp, value) rows and
-    * tiling per group pays ONE of each over the 3n-row frame (q30's
-    * r/f/m quartiles — the r13 verdict's candidate). Same contract as
-    * groupedGlobalRank: `grp` must be bounded-cardinality, `sort` a
-    * strict total order within the group. */
+  /** Per-group exact ntile(k): running count `_rn` and group total `_n`
+    * through SQL ntile arithmetic (first `_n % k` buckets one row
+    * larger). Melted (key, grp, value) rows tile several metrics over
+    * one partitioning (q30's r/f/m quartiles). */
   def groupedGlobalNtile(df: DataFrame, grp: String, k: Int, out: String,
-      sort: Column*): DataFrame = {
-    val nPart = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val ranged = df.repartitionByRange(nPart, (col(grp) +: sort): _*)
-      .withColumn("_pid", spark_partition_id())
-      .localCheckpoint(false)
-    val counts = ranged.groupBy(col("_pid"), col(grp)).agg(count(lit(1)).as("_cnt"))
-    val offs = counts
-      .withColumn("_off", coalesce(sum("_cnt").over(
-        Window.partitionBy(grp).orderBy("_pid")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("_n", sum("_cnt").over(Window.partitionBy(grp)))
-      .select(col("_pid"), col(grp), col("_off"), col("_n"))
-    ranged
-      .withColumn("_lrn", row_number().over(
-        Window.partitionBy(col("_pid"), col(grp)).orderBy(sort: _*)))
-      .join(broadcast(offs), Seq("_pid", grp))
-      .withColumn("_rn", col("_lrn").cast("long") + col("_off"))
-      .withColumn(out, expr(ntileCase(k)))
-      .drop("_pid", "_lrn", "_off", "_n", "_rn")
-  }
+      sort: Column*): DataFrame =
+    rangedPrefix(df, grp, Seq((count(lit(1)), "_rn", Some("_n"))), sort)
+      .withColumn(out, expr(
+        s"""CASE WHEN _rn <= (_n % $k) * (_n div $k + 1)
+                 THEN CAST((_rn - 1) div (_n div $k + 1) + 1 AS INT)
+                 ELSE CAST((_n % $k) + (_rn - (_n % $k) * (_n div $k + 1) - 1) div (_n div $k) + 1 AS INT)
+            END"""))
+      .drop("_rn", "_n")
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint}
 import org.apache.spark.sql.functions._
 
 /** The composed corpus-build job's contract: every artifact it ships
@@ -162,16 +163,51 @@ class BuildCorpusSpec extends AnyFunSuite {
       val shallow = joined(BuildCorpus.dupIdSide(spark, in, raw))
       val deepBc = joined(BuildCorpus.dupIdSide(spark, in, raw, maxBcast = 20L))
       val fallback = joined(BuildCorpus.dupIdSide(spark, in, raw, maxBcast = 3L))
-      assert(shallow.queryExecution.analyzed.toString.contains("broadcast"),
-        "healthy intake lost its broadcast hint")
-      assert(deepBc.queryExecution.analyzed.toString.contains("broadcast"),
-        "small dup set past the raw-count gate lost its broadcast hint")
-      assert(!fallback.queryExecution.analyzed.toString.contains("broadcast"),
-        "adversarial dup set still carries a broadcast hint")
+      // the hint node itself, not a plan-string grep (a column or path
+      // named "broadcast" would satisfy that)
+      def bcastHinted(df: org.apache.spark.sql.DataFrame) = df.queryExecution.analyzed.exists {
+        case h: ResolvedHint => h.hints.strategy.contains(BROADCAST)
+        case _ => false
+      }
+      assert(bcastHinted(shallow), "healthy intake lost its broadcast hint")
+      assert(bcastHinted(deepBc), "small dup set past the raw-count gate lost its broadcast hint")
+      assert(!bcastHinted(fallback), "adversarial dup set still carries a broadcast hint")
       this.eq(shallow, fallback, "dup verdicts across join strategies")
       this.eq(shallow, deepBc, "dup verdicts across gate branches")
       assert(shallow.filter(col("is_dup")).select("doc_id").distinct().count() == 10L,
         "planted dup ids not all flagged")
+    }
+  }
+
+  test("a failing build stops its side threads before the exception escapes") {
+    withTmpDir("buildcorpus-fail") { root =>
+      val in = s"$root/in"
+      GenData.generate(spark, in, 400, 100)
+      // an unreadable media table: the main thread fails at the media
+      // gate, after the dup-index and embedding-audit threads started
+      java.nio.file.Files.write(java.nio.file.Paths.get(Tables.rawPath(in, "media")),
+        "not parquet".getBytes)
+      val err = intercept[Throwable](BuildCorpus.run(spark, in, s"$root/out"))
+      assert(String.valueOf(err.getMessage).contains("media.parquet"), s"failed elsewhere: $err")
+      val alive = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+        .filter(t => t.isAlive && Set("graft-dupindex", "graft-embaudit")(t.getName))
+      assert(alive.isEmpty, s"side threads outlived the failed build: ${alive.map(_.getName).toSeq}")
+
+      // the build's side threads may have finished before the media
+      // gate failed; the mechanism itself, timing-independent: a side
+      // thread INSIDE a long job is cancelled, not waited out
+      val tag = "buildcorpus-spec-side"
+      val side = BuildCorpus.sideThread(spark, tag, "graft-spec-side") {
+        spark.sparkContext.setInterruptOnCancel(true)
+        try spark.sparkContext.parallelize(Seq(1), 1).foreach(_ => Thread.sleep(120000))
+        catch { case _: Throwable => }
+      }
+      while (spark.sparkContext.statusTracker.getJobIdsForTag(tag).isEmpty) Thread.sleep(20)
+      val t0 = System.nanoTime
+      intercept[IllegalStateException](BuildCorpus.stopSidesOnFailure(spark, tag, side) {
+        throw new IllegalStateException("main-thread stage failed")
+      })
+      assert(!side.isAlive && System.nanoTime - t0 < 60e9, "side job waited out, not cancelled")
     }
   }
 

@@ -91,6 +91,25 @@ class EventsSpec extends AnyFunSuite {
     assert(m("1_view") >= m("2_click") && m("2_click") >= m("3_purchase"))
   }
 
+  test("q24 on an all-anonymous intake counts the NULL-user view group and zero later stages") {
+    import spark.implicits._
+    // every user_id NULL: the identified-user aggregate runs over an
+    // empty grouped set. DuckDB's funnel keeps one NULL group in `v`
+    // (GROUP BY NULL) and none in `c`/`p` (the joins on user_id never
+    // match NULL), so its answer is (1, 0, 0).
+    TestSpark.withTmpDir("q24-anon") { dir =>
+      Seq((1L, 1000000L, "view"), (2L, 2000000L, "click"), (3L, 3000000L, "purchase"))
+        .toDF("event_id", "us", "event_type")
+        .select(col("event_id"), expr("timestamp_micros(us)").as("ts"),
+          lit(null).cast("long").as("user_id"), col("event_type"),
+          lit(1.0).as("value"), lit("{}").as("props"))
+        .write.parquet(s"$dir/events.parquet")
+      val m = operators.Events.q24(spark, dir).collect()
+        .map(r => r.getString(0) -> r.get(1)).toMap
+      assert(m == Map("1_view" -> 1L, "2_click" -> 0L, "3_purchase" -> 0L), s"q24 read $m")
+    }
+  }
+
   test("q25 cohort week 0 contains every user exactly once") {
     val ev = Tables(spark, sf, "events")
     val users = ev.select("user_id").distinct().count()
