@@ -1,27 +1,48 @@
 package graft
 
-/** Developer profiling main: times one named query end-to-end through
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
+/** Developer profiling main: times named queries end-to-end through
   * the noop sink and prints every stage over a second (id, task
   * count, wall time) — the quickest way to spot a stage that lost
-  * its parallelism or picked a bad join. Not part of the driver
-  * contract.
+  * its parallelism or picked a bad join. Each `[dbg]` line also
+  * carries that run's Janino compiles and compile time, so a warm
+  * run that still compiles (a codegen cache too small for the working
+  * set) shows before scheduling gets the blame. Not part of the
+  * Bench/Verify contract.
   *
-  * usage: runMain graft.Dbg <sfDir> <queryName> [runs]
+  * usage: runMain graft.Dbg <sfDir> <queries> [runs]
+  *   queries: one name, a comma list, or `all` (every SparkEntry
+  *   query); runs: passes over the whole list (default 1)
   */
 object Dbg {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val name = args(1)
+    val qs =
+      if (args(1) == "all") SparkEntry.all
+      else args(1).split(',').toSeq.map(n =>
+        SparkEntry.all.find(_.name == n).getOrElse(sys.error(s"unknown query $n")))
     val runs = if (args.length > 2) args(2).toInt else 1
     val minStage = sys.env.getOrElse("SPARK_GRAFT_STAGE_MIN", "1.0").toDouble
     val spark = GraftSession.local(Runtime.getRuntime.availableProcessors)
     printStagesOver(spark, minStage)
-    val q = SparkEntry.all.find(_.name == name)
-      .getOrElse(sys.error(s"unknown query $name"))
+    // JVM-wide (wall ns, Janino compiles, compile ns)
+    def now = (System.nanoTime(), CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      CodeGenerator.compileTime)
+    def report(label: String, from: (Long, Long, Long)): Unit = {
+      val (t, c, ns) = now
+      println(f"[dbg] $label time=${(t - from._1) / 1e9}%.1fs compiles=${c - from._2} " +
+        f"compile_ms=${(ns - from._3) / 1e6}%.0f")
+    }
     for (r <- 1 to runs) {
-      val t0 = System.nanoTime()
-      q.fn(spark, dir).write.format("noop").mode("overwrite").save()
-      println(f"[dbg] $name run=$r time=${(System.nanoTime() - t0) / 1e9}%.1fs")
+      val pass = now
+      for (q <- qs) {
+        val m = now
+        q.fn(spark, dir).write.format("noop").mode("overwrite").save()
+        report(s"${q.name} run=$r", m)
+      }
+      report(s"pass run=$r queries=${qs.size}", pass)
     }
     spark.stop()
   }

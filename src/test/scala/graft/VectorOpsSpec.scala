@@ -18,9 +18,13 @@ class VectorOpsSpec extends AnyFunSuite {
     expr("aggregate(zip_with(a, b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), " +
       "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)")
 
+  /** From an RDD, not a local Seq: over a LocalRelation the optimizer
+    * (ConvertToLocalRelation) evaluates the projection interpreted
+    * whatever the codegen settings, and `doGenCode` would never run. */
   private def vecs(n: Int, dim: Int, seed: Long) = {
     val rnd = new scala.util.Random(seed)
-    Seq.fill(n)((Array.fill(dim)(rnd.nextFloat() * 2 - 1), Array.fill(dim)(rnd.nextFloat() * 2 - 1)))
+    spark.sparkContext.parallelize(Seq.fill(n)(
+      (Array.fill(dim)(rnd.nextFloat() * 2 - 1), Array.fill(dim)(rnd.nextFloat() * 2 - 1))), 2)
   }
 
   test("codegen path matches the HOF form bit-for-bit") {
