@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Multimodal, Sampling, Similarity, TextOps}
+import graft.sources.Sources
 
 /** END-TO-END CORPUS BUILD — the one artifact-producing job a user of
   * this library ships, composing the already-verified operator stages
@@ -450,9 +451,7 @@ object BuildCorpus {
         coalesce(col("avail_tokens"), lit(0L)).as("avail_tokens"),
         coalesce(col("shipped_tokens"), lit(0L)).as("shipped_tokens"))
     batch match {
-      case Some(b) => m.withColumn("batch", lit(b))
-        .coalesce(1).write.mode(SaveMode.Overwrite).partitionBy("batch")
-        .option("partitionOverwriteMode", "dynamic").parquet(path)
+      case Some(b) => Sources.overwriteBatch(m.withColumn("batch", lit(b)).coalesce(1), path)
       case None => m.coalesce(1).write.mode(SaveMode.Overwrite).parquet(path)
     }
   }
@@ -655,9 +654,7 @@ object BuildCorpus {
       .localCheckpoint(false) // 2 consumers: survivor anti join, drop set
     val survivors = hashed.join(corpusDup, Seq("doc_id"), "left_anti")
       .localCheckpoint(false) // 2 consumers: families, delta write
-    survivors.withColumn("batch", lit(incId))
-      .write.mode(SaveMode.Overwrite).partitionBy("batch")
-      .option("partitionOverwriteMode", "dynamic").parquet(s"$prev/phashdelta")
+    Sources.overwriteBatch(survivors.withColumn("batch", lit(incId)), s"$prev/phashdelta")
     val fams = Multimodal.q171OfHashes(survivors.withColumnRenamed("phash", "simhash"))
       .localCheckpoint(false) // 2 consumers: ledger agg, drop set
     val fa = fams.agg(count(lit(1)).as("n"),
@@ -754,9 +751,9 @@ object BuildCorpus {
     // persist THIS increment's staged md5s for the next increment —
     // staged, not shipped (the dupindex-over-staged doctrine: novelty
     // is judged against everything the corpus has SEEN)
-    delta.select(md5(col("text").cast("binary")).as("h"), lit(incId).as("batch"))
-      .write.mode(SaveMode.Overwrite).partitionBy("batch")
-      .option("partitionOverwriteMode", "dynamic").parquet(s"$prev/md5delta")
+    Sources.overwriteBatch(
+      delta.select(md5(col("text").cast("binary")).as("h"), lit(incId).as("batch")),
+      s"$prev/md5delta")
 
     // 3. near-dup admission vs the persisted index (+ prior increments).
     // ONE tokenize for probe + appendDelta (the AdmitStream r13
@@ -768,9 +765,7 @@ object BuildCorpus {
         Some(s"$prev/dupdelta"), excludeBatch = Some(incId),
         preCapped = Some(capped))
       .localCheckpoint(false) // 3 consumers: sink + novel + count
-    verdicts.withColumn("batch", lit(incId))
-      .write.mode(SaveMode.Overwrite).partitionBy("batch")
-      .option("partitionOverwriteMode", "dynamic").parquet(s"$out/verdicts")
+    Sources.overwriteBatch(verdicts.withColumn("batch", lit(incId)), s"$out/verdicts")
     val novelIds = verdicts.filter(col("verdict") === "novel").select("doc_id")
     DupIndex.appendDelta(s, s"$prev/dupindex", s"$prev/dupdelta",
       delta.join(novelIds, Seq("doc_id"), "left_semi").select("doc_id", "text"), incId,
@@ -848,9 +843,8 @@ object BuildCorpus {
       coalesce(max("bin_id"), lit(binBase - 1L)).as("mb")).collect()(0)
     // the running last-bin marker the NEXT increment's binBase reads
     import s.implicits._
-    Seq((shTot.getLong(4) + 1L, incId)).toDF("next_bin", "batch")
-      .write.mode(SaveMode.Overwrite).partitionBy("batch")
-      .option("partitionOverwriteMode", "dynamic").parquet(s"$prev/nextbin")
+    Sources.overwriteBatch(Seq((shTot.getLong(4) + 1L, incId)).toDF("next_bin", "batch"),
+      s"$prev/nextbin")
     // shipped media rides with the shipped docs (the full build's
     // corpus-dir convention): the increment's own corpus dir is
     // itself multimodal

@@ -102,20 +102,9 @@ object GenData {
     }.toDF("doc_id", "text", "lang", "source", "n_chars")
     docs.write.mode("overwrite").parquet(s"$out/documents.parquet")
 
-    val dim = 64
     val vecs = spark.range(nVecs.toLong).repartition(64).map { jid =>
       val id: Long = jid
-      def gauss(seed: Long) = {
-        val r = new scala.util.Random(seed * 0x9e3779b97f4a7c15L + 3)
-        Array.fill(dim)(r.nextGaussian())
-      }
-      val base = if (id % 143 == 1 && id > 0) id - 1 else id // planted twin pair
-      val label = (base % 10).toInt // twin shares its base's cluster
-      val cent = gauss(1000 + label)
-      val noise = gauss(7000 + base)
-      val twin = if (id % 143 == 1 && id > 0) gauss(9000 + id).map(_ * 0.15) else new Array[Double](dim)
-      val v = Array.tabulate(dim)(i => (clusterW * cent(i) + 0.25 * noise(i) + twin(i)).toFloat)
-      (id, v.toSeq, label)
+      (id, embedding(id, clusterW).toSeq, (twinBase(id) % 10).toInt)
     }.toDF("vec_id", "embedding", "label")
     vecs.write.mode("overwrite").parquet(s"$out/embeddings.parquet")
 
@@ -180,6 +169,52 @@ object GenData {
     println(s"[gen] $out docs=$nDocs vecs=$nVecs vocab=$vocabN($vocabMode) clusterW=$clusterW" +
       nEventsOpt.map(e => s" events=$e").getOrElse("") +
       nMediaOpt.map(m => s" media=$m").getOrElse(""))
+  }
+
+  // ---- embedding family ----
+
+  private val EmbDim = 64
+
+  private def gauss(seed: Long): Array[Double] = {
+    val r = new scala.util.Random(seed * 0x9e3779b97f4a7c15L + 3)
+    Array.fill(EmbDim)(r.nextGaussian())
+  }
+
+  /** Planted twin pairs: id % 143 == 1 is the twin of id - 1 and
+    * shares its cluster (the `label` column) and noise. */
+  private def twinBase(id: Long): Long = if (id % 143 == 1 && id > 0) id - 1 else id
+
+  /** One vector of the embedding family: `clusterW` times the centroid
+    * of cluster `base % 10` (seeded `centSeed + label`) plus `noiseW`
+    * times the vector's own noise (seeded `7000 + base`). With `twins`
+    * a planted twin adds a 0.15-weight offset of its own to its base's
+    * vector. Every value derives from the id alone. */
+  private[graft] def embedding(id: Long, clusterW: Double, centSeed: Long = 1000L,
+      noiseW: Double = 0.25, twins: Boolean = true): Array[Float] = {
+    val base = if (twins) twinBase(id) else id
+    val cent = gauss(centSeed + base % 10)
+    val noise = gauss(7000 + base)
+    if (base == id) Array.tabulate(EmbDim)(i => (clusterW * cent(i) + noiseW * noise(i)).toFloat)
+    else {
+      val twin = gauss(9000 + id)
+      Array.tabulate(EmbDim)(i =>
+        (clusterW * cent(i) + noiseW * noise(i) + twin(i) * 0.15).toFloat)
+    }
+  }
+
+  /** `n` twin-free vectors with ids from `idBase` (vec_id, embedding):
+    * the family with a caller-set cluster weight. With the default
+    * `centSeed` they share the base corpus's cluster identities and
+    * only the mass moves (the drift scenario's sweep); another seed
+    * family is a new domain (a new embedding model). */
+  private[graft] def vectors(spark: org.apache.spark.sql.SparkSession, n: Int,
+      idBase: Long, clusterW: Double, centSeed: Long = 1000L,
+      noiseW: Double = 0.25): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    spark.range(n.toLong).map { jid =>
+      val id: Long = idBase + jid
+      (id, embedding(id, clusterW, centSeed, noiseW, twins = false).toSeq)
+    }.toDF("vec_id", "embedding")
   }
 
   // ---- media payload synthesis (deterministic, level-structured) ----

@@ -45,11 +45,10 @@ object GraftSession {
     .config("spark.sql.extensions", "graft.GraftExtensions")
     .withExtensions(new GraftExtensions())
 
-  def local(threads: Int, shufflePartitions: Int = 0): SparkSession = {
-    val sp = if (shufflePartitions > 0) shufflePartitions else threads
+  def local(threads: Int): SparkSession = {
     val s = tune(SparkSession.builder()
       .master(s"local[$threads]")
-      .config("spark.sql.shuffle.partitions", sp)
+      .config("spark.sql.shuffle.partitions", threads)
       .config("spark.ui.enabled", "false"))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

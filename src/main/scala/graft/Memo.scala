@@ -21,12 +21,6 @@ import org.apache.spark.sql.SparkSession
   * (tens of files locally; a bounded namenode listing on a remote
   * FS) per cache ACCESS — noise next to the frames these caches
   * guard (shingle self-joins, label-propagation loops, Lloyd fits).
-  * At table-format scale (a 100 TB table is millions of files) a
-  * deployment keys on the table's SNAPSHOT/VERSION ID instead of a
-  * listing — [[pinVersion]] registers it and [[fingerprint]] then
-  * returns it without touching the filesystem; the listing-based
-  * default is the right trade for path-addressed parquet dirs,
-  * which is what this repo's corpora are.
   */
 object Memo {
 
@@ -41,20 +35,7 @@ object Memo {
     * access. Any other scheme resolves through Hadoop's FileSystem
     * (the AnnIndex remote-FS rule); the two spellings of the same
     * dir never mix because the key includes the dir string itself. */
-  /** Caller-pinned snapshot ids: when a deployment already knows its
-    * table's version (table-format snapshot id, a manifest hash),
-    * pinning it makes [[fingerprint]] O(1) — no listing. Re-pin (or
-    * [[unpinVersion]]) when the table changes; a stale pin has
-    * exactly the staleness the pinner signed up for. */
-  private val pinned = scala.collection.concurrent.TrieMap.empty[String, String]
-  def pinVersion(dir: String, version: String): Unit = pinned.update(dir, version)
-  def unpinVersion(dir: String): Unit = { pinned.remove(dir); () }
-
   def fingerprint(s: SparkSession, dir: String): String = {
-    pinned.get(dir) match {
-      case Some(v) => return s"pin:$v"
-      case None =>
-    }
     // URI.create throws on paths holding other URI-illegal chars ('%',
     // '[', …) — those are legal LOCAL paths the old string keys served
     // fine, so a failed parse falls back to local, never to a crash

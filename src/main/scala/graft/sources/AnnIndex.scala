@@ -81,13 +81,9 @@ object AnnIndex {
     * one-shot maintenance job, wrong for a stream). */
   def appendDelta(s: SparkSession, deltaPath: String, cents: Array[Array[Double]],
       batch: DataFrame, batchId: Long): Unit =
-    graft.operators.Similarity.assignCells(s, batch, cents)
+    Sources.overwriteBatch(graft.operators.Similarity.assignCells(s, batch, cents)
       .select("vec_id", "ed", "nrm", "cid")
-      .withColumn("batch", lit(batchId))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("batch", "cid")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(deltaPath)
+      .withColumn("batch", lit(batchId)), deltaPath, Seq("batch", "cid"))
 
   /** Probe base + delta together: both roots prune on cid (the
     * delta's batch dirs enumerate, then cid prunes within each), so
@@ -268,8 +264,8 @@ object AnnIndex {
   /** The ONE recall@k computation (serving nprobe vs exact = all
     * cells, same scorer) — shared by [[recallGate]] (micro hits /
     * denom for the integer-ppm gate) and the drift harness's
-    * macro-averaged report ([[graft.DriftBench.recallOf]] delegates
-    * here), so the two recall definitions cannot drift apart.
+    * macro-averaged report (the drift scenario of [[graft.Scenario]]),
+    * so the two recall definitions cannot drift apart.
     * Returns (hits, denom, macroMean); every probe returns exactly
     * k rows per query, so micro == macro whenever no query's exact
     * set is empty. */

@@ -276,16 +276,13 @@ object DupIndex {
     // scheduling per trigger) — collect_set over ≤ NBuckets values,
     // driver-bounded by construction
     val obs = new org.apache.spark.sql.Observation()
-    kept.join(sz, "doc_id")
+    Sources.overwriteBatch(kept.join(sz, "doc_id")
       .withColumn("sh", xxhash64(col("s")))
       .withColumn("sb", pmod(col("sh"), lit(NBuckets)))
       .withColumn("batch", lit(batchId))
       .select("batch", "sb", "s", "sh", "doc_id", "n")
       .repartition(NBuckets.toInt, col("sb"))
-      .observe(obs, collect_set(col("sb")).as("sbs"))
-      .write.mode(SaveMode.Overwrite).partitionBy("batch", "sb")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(deltaPath)
+      .observe(obs, collect_set(col("sb")).as("sbs")), deltaPath, Seq("batch", "sb"))
     obs.get("sbs").asInstanceOf[scala.collection.Seq[Long]].toSeq.sorted
   }
 

@@ -158,17 +158,14 @@ object LexIndex {
     val tkE = graft.operators.Dedup.tokensExpr
     val st = batch.agg(count(lit(1)).as("n"),
       sum(expr(s"size($tkE)").cast("long")).as("sdl")).collect()(0)
-    batch.select(
+    Sources.overwriteBatch(batch.select(
         col("doc_id"),
         expr(s"size($tkE)").cast("double").as("dl"),
         explode(expr(tkE)).as("tok"))
       .groupBy("doc_id", "dl", "tok").agg(count(lit(1)).cast("double").as("tf"))
       .withColumn("tb", bucket(col("tok")))
       .withColumn("batch", lit(batchId))
-      .select("batch", "tb", "tok", "doc_id", "dl", "tf")
-      .write.mode(SaveMode.Overwrite).partitionBy("batch", "tb")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(deltaPath)
+      .select("batch", "tb", "tok", "doc_id", "dl", "tf"), deltaPath, Seq("batch", "tb"))
     LexStats(st.getLong(0), if (st.isNullAt(1)) 0L else st.getLong(1))
   }
 
@@ -371,7 +368,7 @@ object LexIndex {
     * jobs. Engage when saved ≥ [[PruneMinSaved]] AND saved ≥
     * [[PruneSavedFactor]]·essential.
     *
-    * r11 RE-MEASURE (LexBench A/B, 20-query triggers, local[32],
+    * r11 RE-MEASURE (lex scenario A/B, 20-query triggers, local[32],
     * regenerated zipf corpora, seed-refined θ̂ making the split
     * maximally favorable to pruning): pruned-on LOSES at every
     * tested scale — 3.7 vs 3.1 (x10), 6.3 vs 3.4 (x30), 5.5 vs 3.9
@@ -434,7 +431,7 @@ object LexIndex {
       q: DataFrame, pairs: Seq[(Long, String)], tbOf: Map[String, Long],
       toks: Option[Seq[String]], tbs: Seq[Long], k: Int): Option[DataFrame] = {
     // A/B hook: SPARK_GRAFT_LEX_PRUNE=off measures the unpruned plan
-    // on the same corpus/index (the LexBench comparison column);
+    // on the same corpus/index (the lex scenario's comparison column);
     // =on drops the volume gate (the parity spec's small corpora).
     // System property first — env vars can't be set per-test in-JVM.
     val mode = sys.props.getOrElse("graft.lex.prune",

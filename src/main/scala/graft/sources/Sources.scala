@@ -48,6 +48,15 @@ object Sources {
   def writePartitioned(df: DataFrame, path: String, parts: String*): Unit =
     df.write.mode(SaveMode.Overwrite).partitionBy(parts: _*).parquet(path)
 
+  /** REPLAY-IDEMPOTENT BATCH WRITE: partitioned by `parts` (the batch
+    * column first) with DYNAMIC partition overwrite, so a write
+    * replaces only the partitions its rows fall in. A replayed
+    * micro-batch or increment rewrites exactly its own partition and
+    * never duplicates rows or touches another batch's. */
+  def overwriteBatch(df: DataFrame, path: String, parts: Seq[String] = Seq("batch")): Unit =
+    df.write.mode(SaveMode.Overwrite).partitionBy(parts: _*)
+      .option("partitionOverwriteMode", "dynamic").parquet(path)
+
   /** LATEST-WINS CDC APPLY — the MERGE INTO of a lakehouse, without
     * requiring a table format: `rows` is the union of a base
     * snapshot and any number of change batches, every row carrying a
@@ -105,15 +114,26 @@ object Sources {
     * between a point-range query touching a handful of files and
     * touching every file in the table; it composes with
     * writePartitioned (partition pruning first, stats skip within).
-    * `nFiles` sizes output explicitly (the compact() concern);
-    * repartitionByRange samples the key — layout, not content, may
-    * vary run to run, which is why the skip spec asserts bounds, not
-    * exact file assignments. */
-  def writeSorted(df: DataFrame, path: String, nFiles: Int, sortCols: String*): Unit = {
-    val cols = sortCols.map(df.col)
-    df.repartitionByRange(nFiles, cols: _*)
-      .sortWithinPartitions(cols: _*)
+    * `nFiles` sizes output explicitly (the compact() concern). */
+  def writeSorted(df: DataFrame, path: String, nFiles: Int, sortCols: String*): Unit =
+    tiled(df, nFiles, sortCols.map(org.apache.spark.sql.functions.col): _*)
       .write.mode(SaveMode.Overwrite).parquet(path)
+
+  /** `df` in `nFiles` partitions, partition i holding the i-th range of
+    * `key`, sorted within. An exact [[graft.operators.ops.globalNtile]]
+    * over `key` places every row (equal keys share a tile), so the
+    * layout is a function of the data alone. `repartitionByRange`
+    * would place rows by a sample that Spark seeds with the RDD id, so
+    * file ranges, and what a probe skips, moved with whatever ran
+    * before. */
+  private def tiled(df: DataFrame, nFiles: Int, key: Column*): DataFrame = {
+    val withTile = graft.operators.ops.globalNtile(df, nFiles, "_tile", key: _*)
+    val tile = withTile.schema.fieldIndex("_tile")
+    // HashPartitioner sends Int key i (0 <= i < nFiles) to partition i
+    val placed = withTile.rdd.keyBy(_.getInt(tile) - 1)
+      .partitionBy(new org.apache.spark.HashPartitioner(nFiles)).values
+    df.sparkSession.createDataFrame(placed, withTile.schema)
+      .sortWithinPartitions(key: _*).drop("_tile")
   }
 
   /** Interleave the low 16 bits of `x` with zeros (Morton spread):
@@ -140,7 +160,7 @@ object Sources {
     * from the input itself — never empty when df is non-empty; skew
     * in a dimension costs skip efficiency, not correctness), the
     * Morton code is five shift/mask ops per key (codegen'd), and
-    * rows range-partition + sort by the code. The z column is
+    * rows tile + sort by the code ([[tiled]]). The z column is
     * dropped before writing — layout, not schema. */
   def writeZOrdered(df: DataFrame, path: String, nFiles: Int,
       colA: String, colB: String): Unit = {
@@ -151,14 +171,12 @@ object Sources {
     def norm16(c: Column, lo: Column, hi: Column): Column =
       when(hi === lo, lit(0L)).otherwise(
         ((c - lo).cast("double") / (hi - lo).cast("double") * 65535.0).cast("long"))
-    df.crossJoin(broadcast(stats))
+    val zed = df.crossJoin(broadcast(stats))
       .withColumn("_z",
         spread16(norm16(col(colA), col("_amin"), col("_amax")))
           .bitwiseOR(shiftleft(spread16(norm16(col(colB), col("_bmin"), col("_bmax"))), 1)))
-      .repartitionByRange(nFiles, col("_z"))
-      .sortWithinPartitions("_z")
-      .drop("_z", "_amin", "_amax", "_bmin", "_bmax")
-      .write.mode(SaveMode.Overwrite).parquet(path)
+      .drop("_amin", "_amax", "_bmin", "_bmax")
+    tiled(zed, nFiles, col("_z")).drop("_z").write.mode(SaveMode.Overwrite).parquet(path)
   }
 
   /** CORPUS MANIFEST — the Merkle-style reproducibility artifact a

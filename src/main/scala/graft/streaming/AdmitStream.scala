@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.sources.DupIndex
+import graft.sources.{DupIndex, Sources}
 
 /** ONLINE CORPUS ADMISSION — the streaming face of the persisted
   * near-dup signature index ([[graft.sources.DupIndex]]), completing
@@ -94,13 +94,10 @@ object AdmitStream {
           // the admission tally rides the verdict write (q180 ledger
           // rule — it was a separate count job over the checkpoint)
           val admObs = new org.apache.spark.sql.Observation()
-          verdicts.withColumn("batch", lit(id))
+          Sources.overwriteBatch(verdicts.withColumn("batch", lit(id))
             .observe(admObs, count(lit(1)).as("n_docs"),
               sum(when(col("verdict") === "novel", 1L).otherwise(0L))
-                .as("n_novel"))
-            .write.mode("overwrite").partitionBy("batch")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(verdictPath)
+                .as("n_novel")), verdictPath)
           val novel = b.join(
             verdicts.filter(col("verdict") === "novel").select("doc_id"), "doc_id")
           val deltaSbs = DupIndex.appendDelta(s, basePath, deltaPath, novel, id,
@@ -156,18 +153,15 @@ object AdmitStream {
                 .filter(col("v0") =!= col("v1"))
               (sample.count(), flips.count())
             }
-          adm.join(DupIndex.hotGate(s, deltaPath, Some(baseDfPre), Some(sbs)),
-              lit(true), "left")
+          Sources.overwriteBatch(adm.join(
+              DupIndex.hotGate(s, deltaPath, Some(baseDfPre), Some(sbs)), lit(true), "left")
             .withColumn("batch", lit(id))
             .withColumn("admit_sampled", lit(admSampled))
             .withColumn("admit_flips", lit(admFlips))
             .withColumn("admit_refit", lit(admFlips > 0L))
             .select("batch", "n_docs", "n_novel", "n_delta_shingles",
               "n_delta_rows", "n_newly_hot", "max_df", "cand_mass", "rebuild",
-              "admit_sampled", "admit_flips", "admit_refit")
-            .write.mode("overwrite").partitionBy("batch")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(logPath)
+              "admit_sampled", "admit_flips", "admit_refit"), logPath)
         }
         ()
       }

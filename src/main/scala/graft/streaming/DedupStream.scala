@@ -7,6 +7,8 @@ import org.apache.spark.sql.types._
 
 import scala.util.hashing.MurmurHash3
 
+import graft.sources.Sources
+
 /** One admitted document in a band bucket: id + its sorted distinct
   * shingle hashes (so arriving docs verify exact Jaccard online). */
 sealed trait DocLike { def id: Long; def sh: Array[Long] }
@@ -234,15 +236,11 @@ object DedupStream {
               case r => r.getLong(0)
             }
           val admitted = cands <= candBudgetPerDoc * n
-          b.withColumn("batch", org.apache.spark.sql.functions.lit(id))
-            .write.mode("overwrite").partitionBy("batch")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(if (admitted) passPath else quarantinePath)
-          Seq((id, n, cands, candBudgetPerDoc * n, admitted))
-            .toDF("batch", "n_docs", "cand_pairs", "budget", "admitted")
-            .write.mode("overwrite").partitionBy("batch")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(logPath)
+          Sources.overwriteBatch(
+            b.withColumn("batch", org.apache.spark.sql.functions.lit(id)),
+            if (admitted) passPath else quarantinePath)
+          Sources.overwriteBatch(Seq((id, n, cands, candBudgetPerDoc * n, admitted))
+            .toDF("batch", "n_docs", "cand_pairs", "budget", "admitted"), logPath)
         }
         ()
       }

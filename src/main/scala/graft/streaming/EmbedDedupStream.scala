@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.types._
 
 import graft.operators.Dedup
+import graft.sources.Sources
 
 /** One admitted vector in a (band, bucket): id + raw floats + L2
   * norm, so arrivals verify EXACT cosine online. */
@@ -190,15 +191,10 @@ object EmbedDedupStream {
             .select("skew_x1000").collect().map(_.getLong(0)).sorted
           val med = skews(skews.length / 2)
           val admitted = med < skewGateX1000
-          b.withColumn("batch", lit(id))
-            .write.mode("overwrite").partitionBy("batch")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(if (admitted) passPath else quarantinePath)
-          Seq((id, n, med, admitted))
-            .toDF("batch", "n_rows", "med_skew_x1000", "admitted")
-            .write.mode("overwrite").partitionBy("batch")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(logPath)
+          Sources.overwriteBatch(b.withColumn("batch", lit(id)),
+            if (admitted) passPath else quarantinePath)
+          Sources.overwriteBatch(Seq((id, n, med, admitted))
+            .toDF("batch", "n_rows", "med_skew_x1000", "admitted"), logPath)
         }
         ()
       }

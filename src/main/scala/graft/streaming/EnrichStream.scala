@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.Events
+import graft.sources.Sources
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -416,11 +417,7 @@ object EnrichStream {
     try {
       tagged.count() // materialize once before the sink fan-out
       dirs.foreach { d =>
-        tagged.write
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .mode("overwrite")
-          .parquet(d)
+        Sources.overwriteBatch(tagged, d, Seq("batch_id"))
       }
     } finally tagged.unpersist()
   }

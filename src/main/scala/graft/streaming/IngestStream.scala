@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.sources.AnnIndex
+import graft.sources.{AnnIndex, Sources}
 
 /** ONLINE INDEX INGESTION — the maintenance loop's streaming face,
   * closing the circle with [[ProbeStream]] (serving) and
@@ -98,10 +98,7 @@ object IngestStream {
           // boundary batch
           val refit = nIdx > 0 && AnnIndex.refitExceeds(eB, nB, eIdx, nIdx)
           if (refit)
-            b.withColumn("batch", lit(id))
-              .write.mode("overwrite").partitionBy("batch")
-              .option("partitionOverwriteMode", "dynamic")
-              .parquet(quarantinePath)
+            Sources.overwriteBatch(b.withColumn("batch", lit(id)), quarantinePath)
           else
             AnnIndex.appendDelta(s, deltaPath, cents, b, id)
           // sampled serving-recall measurement, AFTER the admission
@@ -117,12 +114,9 @@ object IngestStream {
               (row.getAs[Long]("recall_ppm"), row.getAs[Boolean]("refit"))
             } else (-1L, false)
           import s.implicits._
-          Seq((id, nB, eB, nIdx, eIdx, refit, recPpm, recRefit))
+          Sources.overwriteBatch(Seq((id, nB, eB, nIdx, eIdx, refit, recPpm, recRefit))
             .toDF("batch", "n_rows", "err_u_batch", "n_index", "err_u_index",
-              "refit", "recall_ppm", "recall_refit")
-            .write.mode("overwrite").partitionBy("batch")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(logPath)
+              "refit", "recall_ppm", "recall_refit"), logPath)
         }
         ()
       }

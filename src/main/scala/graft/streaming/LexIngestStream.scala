@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.sources.LexIndex
+import graft.sources.{LexIndex, Sources}
 import graft.sources.LexIndex.LexStats
 
 /** GATED LEXICAL INGESTION — [[IngestStream]]'s twin for the BM25
@@ -65,21 +65,15 @@ object LexIngestStream {
           val rebuild = g.getAs[Boolean]("rebuild")
           val bs =
             if (rebuild) {
-              b.withColumn("batch", lit(id))
-                .write.mode("overwrite").partitionBy("batch")
-                .option("partitionOverwriteMode", "dynamic")
-                .parquet(quarantinePath)
+              Sources.overwriteBatch(b.withColumn("batch", lit(id)), quarantinePath)
               LexStats(0L, 0L) // nothing admitted
             } else LexIndex.appendDelta(s, deltaPath, b, id)
           import s.implicits._
-          Seq((id, g.getAs[Long]("n_occurrences"), g.getAs[Long]("n_covered"),
-              g.getAs[Long]("cov_ppm_batch"), g.getAs[Long]("cov_ppm_index"),
-              rebuild, bs.nDocs, bs.sumDl))
+          Sources.overwriteBatch(Seq((id, g.getAs[Long]("n_occurrences"),
+              g.getAs[Long]("n_covered"), g.getAs[Long]("cov_ppm_batch"),
+              g.getAs[Long]("cov_ppm_index"), rebuild, bs.nDocs, bs.sumDl))
             .toDF("batch", "n_occurrences", "n_covered", "cov_ppm_batch",
-              "cov_ppm_index", "rebuild", "n_docs_admitted", "sum_dl_admitted")
-            .write.mode("overwrite").partitionBy("batch")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(logPath)
+              "cov_ppm_index", "rebuild", "n_docs_admitted", "sum_dl_admitted"), logPath)
         }
         ()
       }

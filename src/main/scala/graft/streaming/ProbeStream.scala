@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.sources.AnnIndex
+import graft.sources.{AnnIndex, Sources}
 
 /** ONLINE ANN SERVING — the streaming face of the persisted index
   * ([[graft.sources.AnnIndex]]): a stream of query vectors is probed
@@ -43,12 +43,8 @@ object ProbeStream {
           .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
         if (qs.nonEmpty) {
           val s = batch.sparkSession
-          AnnIndex.probe(s, indexPath, cents, qs, nprobe, k)
-            .withColumn("batch", lit(id))
-            .write.mode("overwrite")
-            .partitionBy("batch")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(outPath)
+          Sources.overwriteBatch(AnnIndex.probe(s, indexPath, cents, qs, nprobe, k)
+            .withColumn("batch", lit(id)), outPath)
         }
         ()
       }

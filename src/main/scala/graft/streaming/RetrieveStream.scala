@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Similarity
-import graft.sources.{AnnIndex, LexIndex}
+import graft.sources.{AnnIndex, LexIndex, Sources}
 
 /** ONLINE HYBRID RETRIEVAL — q160's serving face, closing the
   * retrieval family's loop the way [[ProbeStream]] closed the ANN
@@ -61,12 +61,8 @@ object RetrieveStream {
           val vec = AnnIndex.probe(s, annPath, cents, qvecs, nprobe, Similarity.HybK)
             .select(col("query_id"), col("neighbor_id").as("doc_id"),
               col("rank").as("vec_rank"))
-          Similarity.fuseRanks(lex, vec)
-            .withColumn("batch", lit(id))
-            .write.mode("overwrite")
-            .partitionBy("batch")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(outPath)
+          Sources.overwriteBatch(Similarity.fuseRanks(lex, vec)
+            .withColumn("batch", lit(id)), outPath)
         }
         ()
       }

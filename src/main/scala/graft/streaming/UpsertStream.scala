@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.sources.Sources
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -73,10 +73,7 @@ object UpsertStream {
           // tableDir (Spark rejects overwriting a path its plan reads);
           // materializes only the touched buckets' winners — O(batch)
           .localCheckpoint(false)
-        merged.write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(BucketCol)
-          .parquet(tableDir)
+        Sources.overwriteBatch(merged, tableDir, Seq(BucketCol))
       }
     } finally { b.unpersist(); () }
   }

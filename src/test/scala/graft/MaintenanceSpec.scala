@@ -98,15 +98,15 @@ class MaintenanceSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     withTmpDir("maint-drift") { root =>
-      // fitted geometry: GenData's clustered family (DriftBench's
-      // chunk generator, the harness's exact executor path)
+      // fitted geometry: GenData's clustered family (the drift
+      // scenario's chunk generator, the harness's exact executor path)
       val base = s"$root/base"
       val cents = sources.AnnIndex.writeFrom(spark,
-        DriftBench.driftChunk(spark, 4000, 0L, 0.3), base)
+        GenData.vectors(spark, 4000, 0L, 0.3), base)
       // new-DOMAIN drift: strongly clustered around a DIFFERENT
       // centroid family (new embedding model) — the class the refit
       // gate exists for
-      val drifted = DriftBench.driftChunk(spark, 800, 5000000L, 0.45,
+      val drifted = GenData.vectors(spark, 800, 5000000L, 0.45,
         centSeed = 5000L).localCheckpoint(false)
       val rows = drifted.collect().map(r =>
         (r.getLong(0), r.getSeq[Float](1)))
@@ -130,14 +130,14 @@ class MaintenanceSpec extends AnyFunSuite {
       // (quarantine is not probeable — the drifted domain is simply
       // quantized against alien cells), then under the refit root
       val queries = rows.take(32).map { case (i, v) => i -> v.toArray }
-      val pre = DriftBench.recallOf(spark, base, Some(deltaP), cents,
-        queries, nprobe = 2, k = 10)
+      val pre = sources.AnnIndex.recallStats(spark, base, Some(deltaP), cents,
+        queries, nprobe = 2, k = 10)._3
       val out = s"$root/rebuilt"
       val (v, newCents) = sources.Maintenance.maintainAnn(
         spark, base, deltaP, quarP, logP, out)
       assert(v.action == "rebuild" && v.trips == 1L, s"$v")
-      val post = DriftBench.recallOf(spark, out, None, newCents.get,
-        queries, nprobe = 2, k = 10)
+      val post = sources.AnnIndex.recallStats(spark, out, None, newCents.get,
+        queries, nprobe = 2, k = 10)._3
       // post-refit the drifted domain is first-class: its queries'
       // true neighbors (their own tight cluster) live in the probed
       // cells. pre-refit those same queries rank residents through
@@ -177,7 +177,7 @@ class MaintenanceSpec extends AnyFunSuite {
       // harness probes)
       val base = s"$root/base"
       val cents = sources.AnnIndex.writeFrom(spark,
-        DriftBench.driftChunk(spark, 4000, 0L, 0.3), base, cellSize = Some(125))
+        GenData.vectors(spark, 4000, 0L, 0.3), base, cellSize = Some(125))
       // the GATE-BLIND drift class (the r11 finding, SURVEY §4.2):
       // traffic mass moves to NEW modes at modest amplitude (w=0.14,
       // dispersion 0.18 vs the base family's 0.30/0.25). These
@@ -190,8 +190,8 @@ class MaintenanceSpec extends AnyFunSuite {
       // either trips the MSE gate at ratio 2.07 or, at small nprobe,
       // is unrestorable by ANY quantizer; the restorable gate-blind
       // class is structure moving below the MSE threshold.)
-      val mass = DriftBench.driftChunk(spark, 800, 5000000L, 0.14,
-        centSeed = 2000L, noise = 0.18).localCheckpoint(false)
+      val mass = GenData.vectors(spark, 800, 5000000L, 0.14,
+        centSeed = 2000L, noiseW = 0.18).localCheckpoint(false)
       val rows = mass.collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
       val (deltaP, quarP, logP) = (s"$root/delta", s"$root/quar", s"$root/log")
       val mem = MemoryStream[(Long, Seq[Float])]
@@ -237,10 +237,10 @@ class MaintenanceSpec extends AnyFunSuite {
       // SAME serving nprobe
       val queries = rows.sortBy(_._1).take(streaming.IngestStream.RecallSample)
         .map { case (i, v0) => i -> v0.toArray }
-      val pre = DriftBench.recallOf(spark, base, Some(deltaP), cents,
-        queries, nprobe = 2, k = 10)
-      val post = DriftBench.recallOf(spark, out, None, newCents.get,
-        queries, nprobe = 2, k = 10)
+      val pre = sources.AnnIndex.recallStats(spark, base, Some(deltaP), cents,
+        queries, nprobe = 2, k = 10)._3
+      val post = sources.AnnIndex.recallStats(spark, out, None, newCents.get,
+        queries, nprobe = 2, k = 10)._3
       info(f"mass-drift serving recall: pre=$pre%.3f post=$post%.3f")
       assert(pre < 0.6, f"pre-rebuild recall $pre%.3f not below the floor the gate saw")
       assert(post >= 0.9, f"rebuild did not restore serving recall: $pre%.3f -> $post%.3f")

@@ -22,13 +22,6 @@ class MemoSpec extends AnyFunSuite {
       GenData.generate(spark, dir, 350, 220)
       assert(Memo.fingerprint(spark, dir) != f1,
         "regenerated corpus kept the same fingerprint")
-      // a pinned snapshot id bypasses the listing entirely (the
-      // table-format deployment path): even a nonexistent dir
-      // fingerprints as the pin until unpinned
-      Memo.pinVersion(dir + "/nope", "snap-42")
-      try assert(Memo.fingerprint(spark, dir + "/nope") == "pin:snap-42")
-      finally Memo.unpinVersion(dir + "/nope")
-      assert(Memo.fingerprint(spark, dir + "/nope") == "absent")
     }
   }
 

@@ -414,8 +414,7 @@ class SourcesSpec extends AnyFunSuite {
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty && a.count() > 0)
     // the sorted layout's footer stats confine the read to ~one file's
     // row groups; round-robin spreads the key across every file so
-    // nothing skips. 4x is a deliberately loose floor — layout, not
-    // content, varies with repartitionByRange's sampling.
+    // nothing skips. 4x is a deliberately loose floor.
     val sortedRows = scanOutputRows(probe(sorted))
     val unsortedRows = scanOutputRows(probe(unsorted))
     assert(sortedRows * 4 <= unsortedRows,
@@ -442,7 +441,7 @@ class SourcesSpec extends AnyFunSuite {
     // the single-key layout prunes on l_orderkey but reads every
     // matching file in full for the l_partkey cut; the z-layout's
     // files are narrow in both dims. 2x is a loose floor (Morton
-    // boxes overlap query rectangles; range sampling varies layout).
+    // boxes overlap query rectangles).
     val zRows = scanOutputRows(probe(zdir))
     val aRows = scanOutputRows(probe(adir))
     assert(zRows * 2 <= aRows,

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Batch/stream parity: the streaming pipeline must produce the same
   * results as the batch operators it mirrors. */
 class StreamingSpec extends AnyFunSuite {
-  import TestSpark.{spark, sf}
+  import TestSpark.{spark, sf, withTmpDir}
 
   test("streaming enrichment matches batch q21 exactly") {
     val q = streaming.EnrichStream.enriched(spark, sf)
@@ -160,59 +160,60 @@ class StreamingSpec extends AnyFunSuite {
       "x10 events stress corpus not present on this machine")
     import streaming.EnrichStream
     val chunks = 8
-    val spool = StreamBench.spoolEvents(spark, "/tmp/estress_x10", chunks)
-    val total = spark.read.schema(EnrichStream.rawSchema).parquet(spool).count()
-    val ltvUsers = EnrichStream.typed(Tables(spark, "/tmp/estress_x10", "events"))
-      .filter(e => e.event_type.contains("purchase") ||
-        e.event_type.contains("return") || e.is_return)
-      .map(_.user_id)(org.apache.spark.sql.Encoders.scalaLong)
-      .distinct().count()
-    def replay() = EnrichStream.replaySource(spark, spool, 1)
+    withTmpDir("x10-spool") { tmp =>
+      val spool = Scenario.spoolEvents(spark, "/tmp/estress_x10", chunks, tmp)
+      val total = spark.read.schema(EnrichStream.rawSchema).parquet(spool).count()
+      val ltvUsers = EnrichStream.typed(Tables(spark, "/tmp/estress_x10", "events"))
+        .filter(e => e.event_type.contains("purchase") ||
+          e.event_type.contains("return") || e.is_return)
+        .map(_.user_id)(org.apache.spark.sql.Encoders.scalaLong)
+        .distinct().count()
+      def replay() = EnrichStream.replaySource(spark, spool, 1)
 
-    val ltv = StreamBench.measure("ltv",
-      EnrichStream.ltvStateful(EnrichStream.typed(replay()))
-        .writeStream.format("noop").outputMode("append").start(), ltvUsers, "")
-    // nothing dropped as late under time-ordered replay, and state is
-    // EXACTLY one row per purchase/return user — not per event
-    assert(ltv.rows == total, s"ltv admitted ${ltv.rows} of $total rows")
-    assert(ltv.maxStateRows == ltvUsers,
-      s"ltv state ${ltv.maxStateRows} != $ltvUsers purchase/return users")
+      val ltv = Scenario.drain(spark)(
+        EnrichStream.ltvStateful(EnrichStream.typed(replay()))
+          .writeStream.format("noop").outputMode("append").start())
+      // nothing dropped as late under time-ordered replay, and state is
+      // EXACTLY one row per purchase/return user — not per event
+      assert(ltv.rows == total, s"ltv admitted ${ltv.rows} of $total rows")
+      assert(ltv.maxStateRows == ltvUsers,
+        s"ltv state ${ltv.maxStateRows} != $ltvUsers purchase/return users")
 
-    val sess = StreamBench.measure("sessions",
-      EnrichStream.sessionizedStream(replay().filter(col("user_id").isNotNull))
-        .writeStream.format("noop").outputMode("append").start(),
-      0L, "")
-    // open sessions bounded by events within the ~2-batch watermark
-    // horizon (rate x horizon), never by the 1M-event history
-    assert(sess.rows == total)
-    assert(sess.maxStateRows <= 2L * (total / chunks + 1L),
-      s"session state ${sess.maxStateRows} exceeds the rate x horizon bound")
-    assert(sess.maxStateRows < total / 4,
-      "session state tracks history, not the open horizon")
+      val sess = Scenario.drain(spark)(
+        EnrichStream.sessionizedStream(replay().filter(col("user_id").isNotNull))
+          .writeStream.format("noop").outputMode("append").start())
+      // open sessions bounded by events within the ~2-batch watermark
+      // horizon (rate x horizon), never by the 1M-event history
+      assert(sess.rows == total)
+      assert(sess.maxStateRows <= 2L * (total / chunks + 1L),
+        s"session state ${sess.maxStateRows} exceeds the rate x horizon bound")
+      assert(sess.maxStateRows < total / 4,
+        "session state tracks history, not the open horizon")
 
-    val roll = StreamBench.measure("rolling",
-      EnrichStream.rollingActiveStream(replay())
-        .writeStream.format("noop").outputMode("update").start(), 0L, "")
-    val bound = 8L + 2L * StreamBench.chunkSpanDays(spark, spool, chunks)
-    assert(roll.maxStateRows > 0 && roll.maxStateRows <= bound,
-      s"rolling-active state ${roll.maxStateRows} outside (0, $bound]")
+      val roll = Scenario.drain(spark)(
+        EnrichStream.rollingActiveStream(replay())
+          .writeStream.format("noop").outputMode("update").start())
+      val bound = 8L + 2L * Scenario.chunkSpanDays(spark, spool, chunks)
+      assert(roll.maxStateRows > 0 && roll.maxStateRows <= bound,
+        s"rolling-active state ${roll.maxStateRows} outside (0, $bound]")
 
-    // the r9 emission-mode additions: per-closed-session append with
-    // collected-struct state (same open-session row bound as
-    // sessions), and complete-mode republication with the structural
-    // #types x 168 cell cap — flat no matter the stream length
-    val paths = StreamBench.measure("session_paths",
-      EnrichStream.sessionPathStream(replay().filter(col("user_id").isNotNull))
-        .writeStream.format("noop").outputMode("append").start(), 0L, "")
-    assert(paths.rows == total)
-    assert(paths.maxStateRows <= 2L * (total / chunks + 1L),
-      s"session-path state ${paths.maxStateRows} exceeds the rate x horizon bound")
-    val season = StreamBench.measure("season",
-      EnrichStream.seasonStream(replay())
-        .writeStream.format("noop").outputMode("complete").start(), 0L, "")
-    assert(season.rows == total)
-    assert(season.maxStateRows > 0 && season.maxStateRows <= 5L * 168L,
-      s"season state ${season.maxStateRows} exceeds the #types x 168 structural cap")
+      // the r9 emission-mode additions: per-closed-session append with
+      // collected-struct state (same open-session row bound as
+      // sessions), and complete-mode republication with the structural
+      // #types x 168 cell cap — flat no matter the stream length
+      val paths = Scenario.drain(spark)(
+        EnrichStream.sessionPathStream(replay().filter(col("user_id").isNotNull))
+          .writeStream.format("noop").outputMode("append").start())
+      assert(paths.rows == total)
+      assert(paths.maxStateRows <= 2L * (total / chunks + 1L),
+        s"session-path state ${paths.maxStateRows} exceeds the rate x horizon bound")
+      val season = Scenario.drain(spark)(
+        EnrichStream.seasonStream(replay())
+          .writeStream.format("noop").outputMode("complete").start())
+      assert(season.rows == total)
+      assert(season.maxStateRows > 0 && season.maxStateRows <= 5L * 168L,
+        s"season state ${season.maxStateRows} exceeds the #types x 168 structural cap")
+    }
   }
 
   test("x30 stress replay: session state tracks RATE, not history (the x10 law at 3x the rate)") {
@@ -220,21 +221,23 @@ class StreamingSpec extends AnyFunSuite {
       "x30 events stress corpus not present on this machine")
     import streaming.EnrichStream
     val chunks = 8
-    val spool = StreamBench.spoolEvents(spark, "/tmp/estress_x30", chunks)
-    val total = spark.read.schema(EnrichStream.rawSchema).parquet(spool).count()
-    val sess = StreamBench.measure("sessions",
-      EnrichStream.sessionizedStream(
-          EnrichStream.replaySource(spark, spool, 1).filter(col("user_id").isNotNull))
-        .writeStream.format("noop").outputMode("append").start(), 0L, "")
-    assert(sess.rows == total)
-    // same law as x10: open sessions <= events in ~2 replay chunks.
-    // 3x the event rate, same horizon -> state scales WITH the chunk
-    // (measured 377k vs 119k at x10, ratio to chunk ~1.0 both), never
-    // with the 3M-event history
-    assert(sess.maxStateRows <= 2L * (total / chunks + 1L),
-      s"x30 session state ${sess.maxStateRows} exceeds the rate x horizon bound")
-    assert(sess.maxStateRows < total / 4,
-      "x30 session state tracks history, not the open horizon")
+    withTmpDir("x30-spool") { tmp =>
+      val spool = Scenario.spoolEvents(spark, "/tmp/estress_x30", chunks, tmp)
+      val total = spark.read.schema(EnrichStream.rawSchema).parquet(spool).count()
+      val sess = Scenario.drain(spark)(
+        EnrichStream.sessionizedStream(
+            EnrichStream.replaySource(spark, spool, 1).filter(col("user_id").isNotNull))
+          .writeStream.format("noop").outputMode("append").start())
+      assert(sess.rows == total)
+      // same law as x10: open sessions <= events in ~2 replay chunks.
+      // 3x the event rate, same horizon -> state scales WITH the chunk
+      // (measured 377k vs 119k at x10, ratio to chunk ~1.0 both), never
+      // with the 3M-event history
+      assert(sess.maxStateRows <= 2L * (total / chunks + 1L),
+        s"x30 session state ${sess.maxStateRows} exceeds the rate x horizon bound")
+      assert(sess.maxStateRows < total / 4,
+        "x30 session state tracks history, not the open horizon")
+    }
   }
 
   test("streaming anomaly hours match a prefix-stats recomputation exactly") {

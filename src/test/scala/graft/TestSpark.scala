@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * nanosAsLong, GraftExtensions) as Verify/Bench physical plans.
   */
 object TestSpark {
-  lazy val spark: SparkSession = GraftSession.local(4, 4)
+  lazy val spark: SparkSession = GraftSession.local(4)
   val sf: String = "/root/testdata/sf0.001"
 
   /** Temp dir scoped to `f`, recursively deleted in finally — specs
