@@ -477,15 +477,10 @@ object BuildCorpus {
     import s.implicits._
     val base = s.read.parquet(s"$prev/mixstats")
       .select("lang", "avail_tokens", "shipped_tokens")
-    val deltas = {
-      val p = s"$prev/mixdelta"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      if (hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp))
-        s.read.schema(org.apache.spark.sql.types.StructType.fromDDL(
-            "lang STRING, avail_tokens BIGINT, shipped_tokens BIGINT, batch BIGINT"))
-          .parquet(p).select("lang", "avail_tokens", "shipped_tokens")
-      else base.limit(0)
-    }
+    // no mixdelta yet: a base with no increments
+    val deltas = readOrEmpty(s, s"$prev/mixdelta",
+        "lang STRING, avail_tokens BIGINT, shipped_tokens BIGINT, batch BIGINT")
+      .select("lang", "avail_tokens", "shipped_tokens")
     val rows = base.unionByName(deltas).groupBy("lang")
       .agg(sum("avail_tokens").as("a"), sum("shipped_tokens").as("sh"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
@@ -503,10 +498,8 @@ object BuildCorpus {
       .toDF("n_langs", "shipped_tokens", "drift_ppm", "worst_lang", "rebuild")
   }
 
-  private def hasMedia(s: SparkSession, in: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(Tables.rawPath(in, "media"))
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
-  }
+  private def hasMedia(s: SparkSession, in: String): Boolean =
+    Sources.exists(s, Tables.rawPath(in, "media"))
 
   /** The media stages (see the 4m call site): cross-modal admission
     * over the REAL payload decode + image-family canonical keep.
@@ -569,28 +562,17 @@ object BuildCorpus {
   /** Resident admitted-image hashes for [[mediaStagesIncremental]]'s
     * family-admission probe: the base build's persisted phashes plus
     * prior increments' phashdelta batches (own batch excluded —
-    * replay purity). A pre-r13 media-aware base persisted no phashes:
-    * fall back to re-hashing its SHIPPED media payloads (canonical
-    * members only — a weaker resident set than the admitted one, but
-    * correct; also an O(base-media) decode, exactly the cost the
-    * persisted artifact exists to avoid). No media at prev at all →
-    * empty resident set (the base was text-only). */
+    * replay purity). [[run]] writes `phashes/` whenever its intake
+    * ships media, so no phashes means a text-only base (empty
+    * resident set); a base that shipped media without them predates
+    * that layout and is rejected. */
   private def readPhashes(s: SparkSession, prev: String, excludeBatch: Long): DataFrame = {
-    import s.implicits._
     val ddl = "doc_id BIGINT, phash BIGINT"
-    val fs = new org.apache.hadoop.fs.Path(prev)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    def at(p: String) = new org.apache.hadoop.fs.Path(p)
-    val base =
-      if (fs.exists(at(s"$prev/phashes")))
-        s.read.schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
-          .parquet(s"$prev/phashes")
-      else if (fs.exists(at(s"$prev/corpus/media.parquet")))
-        Multimodal.imageHashes(s.read.parquet(s"$prev/corpus/media.parquet")
-          .select(col("doc_id"), col("payload")).as[(Long, Array[Byte])])
-      else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(ddl))
-    base.unionByName(
+    require(Sources.exists(s, s"$prev/phashes") ||
+      !Sources.exists(s, s"$prev/corpus/media.parquet"),
+      s"build $prev ships media but has no phashes/: it predates the current " +
+        "layout; rebuild it with BuildCorpus.run")
+    readOrEmpty(s, s"$prev/phashes", ddl).unionByName(
       readBatched(s, s"$prev/phashdelta", s"$ddl, batch BIGINT", excludeBatch)
         .select("doc_id", "phash"))
   }
@@ -865,33 +847,29 @@ object BuildCorpus {
     // the un-rebalanced chain has drifted past the rebuild threshold
     writeMixStats(s, delta.join(keep, "doc_id"), shipped,
       s"$prev/mixdelta", batch = Some(incId))
-    val haveBase = {
-      val hp = new org.apache.hadoop.fs.Path(s"$prev/mixstats")
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
-    }
-    if (haveBase) {
-      val mg = mixtureGate(s, prev).collect()(0)
-      decisions += ((10, "mixture_drift", mg.getAs[Long]("n_langs"),
-        mg.getAs[Long]("shipped_tokens"),
-        s"drift_ppm=${mg.getAs[Long]("drift_ppm")} worst=${mg.getAs[String]("worst_lang")} " +
-          s"rebuild=${mg.getAs[Boolean]("rebuild")}"))
-    } else decisions += ((10, "mixture_drift", 0L, 0L,
-      "no mixstats at prev (pre-r9 base) — gate unavailable until rebuild"))
+    val mg = mixtureGate(s, prev).collect()(0)
+    decisions += ((10, "mixture_drift", mg.getAs[Long]("n_langs"),
+      mg.getAs[Long]("shipped_tokens"),
+      s"drift_ppm=${mg.getAs[Long]("drift_ppm")} worst=${mg.getAs[String]("worst_lang")} " +
+        s"rebuild=${mg.getAs[Boolean]("rebuild")}"))
 
     writeLog(s, decisions.rows, out)
   }
 
   /** Read a batch-partitioned side artifact under `prev`, EXCLUDING
     * this increment's own batch (replay purity: a re-run of increment
-    * N must see exactly the state increments 1..N-1 left). Explicit
-    * schema — the path may not exist yet (first increment) or hold
-    * only an empty _SUCCESS from a zero-row batch. */
+    * N must see exactly the state increments 1..N-1 left). */
   private def readBatched(s: SparkSession, path: String, ddl: String,
-      excludeBatch: Long): DataFrame = {
+      excludeBatch: Long): DataFrame =
+    readOrEmpty(s, path, ddl).filter(col("batch") =!= excludeBatch)
+
+  /** `path` read under the explicit schema `ddl`, or no rows when it
+    * does not exist yet (a first increment, a text-only base). The
+    * explicit schema also covers a dir holding only the _SUCCESS of a
+    * zero-row write. */
+  private def readOrEmpty(s: SparkSession, path: String, ddl: String): DataFrame = {
     val schema = org.apache.spark.sql.types.StructType.fromDDL(ddl)
-    val hp = new org.apache.hadoop.fs.Path(path)
-    if (!hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp))
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else s.read.schema(schema).parquet(path).filter(col("batch") =!= excludeBatch)
+    if (Sources.exists(s, path)) s.read.schema(schema).parquet(path)
+    else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
 }

@@ -62,14 +62,8 @@ object Memo {
         try {
           val a = java.nio.file.Files.readAttributes(
             p, classOf[java.nio.file.attribute.BasicFileAttributes])
-          if (a.isRegularFile) {
-            var h = 0xcbf29ce484222325L
-            def mix(x: Long): Unit = { h ^= x; h *= 0x100000001b3L }
-            mix(p.toString.hashCode.toLong)
-            mix(a.size())
-            mix(a.lastModifiedTime().toMillis)
-            acc += h
-          }
+          if (a.isRegularFile)
+            acc += fileHash(p.toString, a.size(), a.lastModifiedTime().toMillis)
         } catch { case _: java.io.IOException => /* vanished mid-walk */ }
       } finally st.close()
       java.lang.Long.toHexString(acc)
@@ -89,14 +83,16 @@ object Memo {
     val it = fs.listFiles(p, true)
     while (it.hasNext) {
       val st = it.next()
-      var h = 0xcbf29ce484222325L
-      def mix(x: Long): Unit = { h ^= x; h *= 0x100000001b3L }
-      mix(st.getPath.toString.hashCode.toLong)
-      mix(st.getLen)
-      mix(st.getModificationTime)
-      acc += h
+      acc += fileHash(st.getPath.toString, st.getLen, st.getModificationTime)
     }
     java.lang.Long.toHexString(acc)
+  }
+
+  /** One file's FNV-1a over (path hash, length, mtime); the
+    * fingerprints sum these across files. */
+  private def fileHash(path: String, len: Long, mtime: Long): Long = {
+    def mix(h: Long, x: Long): Long = (h ^ x) * 0x100000001b3L
+    mix(mix(mix(0xcbf29ce484222325L, path.hashCode.toLong), len), mtime)
   }
 
   /** A memo keyed by (session, dir, sub-key, dir fingerprint) — the

@@ -351,8 +351,7 @@ object Multimodal {
   private[graft] def payloads(s: SparkSession, dir: String): Dataset[(Long, Array[Byte])] = {
     import s.implicits._
     val mp = s"$dir/media.parquet"
-    val hp = new org.apache.hadoop.fs.Path(mp)
-    if (hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp))
+    if (graft.sources.Sources.exists(s, mp))
       s.read.parquet(mp).select(col("doc_id"), col("payload"))
         .as[(Long, Array[Byte])]
     else Tables(s, dir, "documents")

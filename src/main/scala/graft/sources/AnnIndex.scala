@@ -104,18 +104,11 @@ object AnnIndex {
     residents(s, basePath, Some(deltaPath))
       .write.mode(SaveMode.Overwrite).partitionBy("cid").parquet(outPath)
 
-  /** Resident rows of base (+ optional delta, batch column dropped).
-    * Delta existence resolves through Hadoop's FileSystem API, not
-    * java.io.File — on any remote Hadoop-compatible FS (the 100 TB
-    * deployments) a local-file check would silently report the delta
-    * absent and probe/compact base-only data. */
+  /** Resident rows of base (+ optional delta, batch column dropped). */
   private def residents(s: SparkSession, basePath: String,
       deltaPath: Option[String]): DataFrame = {
     val base = s.read.parquet(basePath).select("vec_id", "ed", "nrm", "cid")
-    deltaPath.filter { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
-    } match {
+    deltaPath.filter(Sources.exists(s, _)) match {
       case Some(p) => base.union(s.read.parquet(p).select("vec_id", "ed", "nrm", "cid"))
       case None => base
     }

@@ -92,95 +92,15 @@ object DupIndex {
   private val deltaSchema = org.apache.spark.sql.types.StructType.fromDDL(
     "s STRING, sh BIGINT, doc_id BIGINT, n BIGINT, batch BIGINT, sb BIGINT")
 
-  // PRE-UPGRADE layouts (written before postings carried `sh`): an
-  // explicit-schema read of those files returns sh = NULL, the
-  // hash-keyed probe join matches ZERO residents, and every near-dup
-  // is silently ADMITTED until a compaction rewrites the root — the
-  // worst failure mode an admission index can have. Detect the layout
-  // (one footer read per sniffed dir, memoized) and DERIVE
-  // sh = xxhash64(s) on read for old layouts: correct (it is exactly
-  // what writePostings stores), at pre-r12 probe cost; current
-  // layouts keep the pruned hash-only fast path. BASE roots are one
-  // layout end to end (written atomically, immutable between
-  // compactions) — one sniff of the root. DELTA roots are NOT: a
-  // pre-upgrade sink that keeps appending post-upgrade batches mixes
-  // layouts under one root, and a single-footer sniff landing on a
-  // new file would silently read sh = NULL for every old batch — so
-  // delta reads sniff PER batch directory (each batch is written
-  // whole by one code version) and union the two reads. Memo
-  // staleness is safe by direction: a replay rewriting an old batch
-  // with new code leaves a stale "derive" verdict, and the derive
-  // path is correct on either layout; DOWNGRADES (sh column removed
-  // in place) are outside the contract.
-  private val shPresent =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]
-  // one recursive listing + ONE raw parquet footer per sniffed dir
-  // (memoized) — NOT a DataFrameReader init per dir, which costs
-  // ~50-100 ms of datasource resolution each: a restarted sink's
-  // first delta read sniffs every accumulated batch dir, and at a
-  // compaction-overdue ~300 batches the heavyweight version added
-  // multiple seconds to the first trigger
-  private def hasShFile(s: SparkSession, dir: String): Boolean =
-    shPresent.computeIfAbsent(dir, _ => {
-      val conf = s.sparkContext.hadoopConfiguration
-      val hp = new org.apache.hadoop.fs.Path(dir)
-      val fs = hp.getFileSystem(conf)
-      def firstParquet(p: org.apache.hadoop.fs.Path): Option[org.apache.hadoop.fs.Path] = {
-        val (dirs, files) = fs.listStatus(p).partition(_.isDirectory)
-        files.find(_.getPath.getName.endsWith(".parquet")).map(_.getPath)
-          .orElse(dirs.sortBy(_.getPath.getName).iterator
-            .flatMap(d => firstParquet(d.getPath)).nextOption())
-      }
-      firstParquet(hp) match {
-        // existing-but-empty dir: only _SUCCESS, nothing to sniff —
-        // the explicit-schema read below handles it
-        case None => true
-        case Some(f) =>
-          val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
-          try rd.getFileMetaData.getSchema.containsField("sh")
-          finally rd.close()
-      }
-    }).booleanValue
-
-  private def dropSh(t: org.apache.spark.sql.types.StructType) =
-    org.apache.spark.sql.types.StructType(t.filterNot(_.name == "sh"))
-
-  /** Posting/delta scan with the layout branch: post-r12 layouts read
-    * the stored hash (column-pruned fast path); pre-upgrade layouts
-    * derive it from the shingle string. */
-  private def readPost(s: SparkSession, root: String, delta: Boolean): DataFrame = {
-    val schema = if (delta) deltaSchema else postSchema
-    def fast(paths: Seq[String]) = s.read.option("basePath", root)
-      .schema(schema).parquet(paths: _*)
-    def derive(paths: Seq[String]) = s.read.option("basePath", root)
-      .schema(dropSh(schema)).parquet(paths: _*)
-      .withColumn("sh", xxhash64(col("s")))
-      // cosmetic: align column order with the fast leg (the union is
-      // unionByName and every consumer selects by name — this only
-      // keeps printSchema/debug output identical across branches)
-      .select(schema.fieldNames.map(col).toSeq: _*)
-    if (!delta) {
-      if (hasShFile(s, root)) s.read.schema(schema).parquet(root)
-      else derive(Seq(root))
-    } else {
-      // per-batch layout split: one driver listing for the batch
-      // dirs + one memoized raw-footer sniff per batch dir (see
-      // [[hasShFile]] for why that must stay lightweight)
-      val hp = new org.apache.hadoop.fs.Path(root)
-      val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val batchDirs =
-        if (!fs.exists(hp)) Array.empty[org.apache.hadoop.fs.Path]
-        else fs.listStatus(hp).filter(st =>
-          st.isDirectory && st.getPath.getName.startsWith("batch="))
-          .map(_.getPath)
-      val (newB, oldB) = batchDirs.partition(p => hasShFile(s, p.toString))
-      if (oldB.isEmpty) s.read.schema(schema).parquet(root) // incl. empty root
-      else if (newB.isEmpty) derive(Seq(root))
-      else fast(newB.map(_.toString).toSeq)
-        .unionByName(derive(oldB.map(_.toString).toSeq))
-    }
-  }
+  /** The one current root layout: every root [[writeFrom]] or
+    * [[compact]] writes carries `df/` (r13) and postings with the
+    * stored `sh` (r12). An older root is rejected, not healed — by
+    * the LSM rule a delta is never older than its base, so this one
+    * check on the base covers its delta too. */
+  private def requireCurrent(s: SparkSession, basePath: String): Unit =
+    require(Sources.exists(s, dfP(basePath)),
+      s"DupIndex root $basePath has no df/ artifact: it predates the current " +
+        "layout (stored sh + df/); rebuild it with DupIndex.writeFrom")
 
   private def readHot(s: SparkSession, basePath: String): DataFrame =
     s.read.schema(hotSchema).parquet(hotP(basePath)).select("s")
@@ -253,8 +173,7 @@ object DupIndex {
     * Returns the batch's BUCKET FOOTPRINT (distinct `sb`, sorted) —
     * computed from the kept frame the write itself consumed, so the
     * streaming face scopes its hot gate without re-listing and
-    * re-scanning the just-written partition ([[deltaBuckets]] stays
-    * for callers that only have the at-rest delta). The write
+    * re-scanning the just-written partition. The write
     * repartitions by `sb` (r13): the join output otherwise lands as
     * one file per (task × touched bucket) ≈ shuffle-width × NBuckets
     * small files PER TRIGGER, and every later probe/gate pays that
@@ -286,8 +205,8 @@ object DupIndex {
     obs.get("sbs").asInstanceOf[scala.collection.Seq[Long]].toSeq.sorted
   }
 
-  /** Resident postings of base (+ delta when present — resolved via
-    * Hadoop's FileSystem, the [[AnnIndex]] remote-FS rule). `sbs` is
+  /** Resident postings of base (+ delta when present — a base no
+    * trigger has appended to has none yet). `sbs` is
     * the probe batch's shingle-bucket set (≤ [[NBuckets]] values,
     * driver-bounded): `sb.isin` is a PARTITION filter on both roots,
     * so a bucket-sparse trigger reads only its own directories.
@@ -299,15 +218,13 @@ object DupIndex {
   private def residents(s: SparkSession, basePath: String,
       deltaPath: Option[String], sbs: Seq[Long],
       excludeBatch: Option[Long]): DataFrame = {
-    val base = readPost(s, post(basePath), delta = false)
+    requireCurrent(s, basePath)
+    val base = s.read.schema(postSchema).parquet(post(basePath))
       .filter(col("sb").isin(sbs: _*))
       .select("sb", "s", "sh", "doc_id", "n")
-    deltaPath.filter { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
-    } match {
+    deltaPath.filter(Sources.exists(s, _)) match {
       case Some(p) =>
-        val d0 = readPost(s, p, delta = true)
+        val d0 = s.read.schema(deltaSchema).parquet(p)
           .filter(col("sb").isin(sbs: _*))
         val d = excludeBatch.map(b => d0.filter(col("batch") =!= lit(b)))
           .getOrElse(d0)
@@ -427,9 +344,6 @@ object DupIndex {
     * [[newlyHotKeys]] (the key set itself). */
   private def unionDf(s: SparkSession, deltaPath: String,
       baseDfPre: Option[DataFrame], sbs: Option[Seq[Long]]): DataFrame = {
-    // raw explicit-schema scan is layout-safe HERE ONLY because no
-    // consumer selects the stored `sh` (newlyHotKeys recomputes it
-    // from `s`); anything needing `sh` must go through readPost
     val scan0 = s.read.schema(deltaSchema).parquet(deltaPath)
     val scan = sbs.fold(scan0)(bs => scan0.filter(col("sb").isin(bs: _*)))
     val ddf = scan
@@ -476,43 +390,17 @@ object DupIndex {
       .withColumn("rebuild", col("n_newly_hot") > 0L)
   }
 
-  /** Distinct shingle buckets of ONE delta batch partition — the
-    * trigger-scoped [[hotGate]] footprint. Prunes to `batch=<id>`
-    * (partition filter), so the cost is one listing + a ≤NBuckets
-    * distinct over the trigger's own rows. */
-  def deltaBuckets(s: SparkSession, deltaPath: String, batchId: Long): Seq[Long] =
-    // raw scan layout-safe: only partition columns read (never `sh`)
-    s.read.schema(deltaSchema).parquet(deltaPath)
-      .filter(col("batch") === lit(batchId))
-      .select("sb").distinct().collect().map(_.getLong(0)).toSeq
-
-  // artifact-presence memo, the shPresent pattern: one FS probe per
-  // root; roots are immutable between compactions (LSM discipline)
-  private val dfArtPresent =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]
-
   /** Per-shingle BASE document frequency (sb, s, df_base) — the
-    * [[hotGate]] comparand. Static between compactions: post-r13
-    * roots persist it as the `df/` artifact at build/compact time
-    * and this is a cheap pruned scan; PRE-UPGRADE roots (no `df/`)
-    * fall back to aggregating the postings, checkpointed so a
-    * long-lived sink pays the aggregation once per session (the old
-    * behavior — measured ~20-30 s on the first gate use at x300). */
+    * [[hotGate]] comparand. Static between compactions: roots
+    * persist it as the `df/` artifact at build/compact time, so this
+    * is a cheap scan instead of the ~20-30 s postings aggregation
+    * (x300). Checkpointed: the frame is joined per trigger, and
+    * re-scanning the 9M-row artifact each time measured 1-2 s/trigger
+    * slower than the materialized read. */
   def baseDf(s: SparkSession, basePath: String): DataFrame = {
-    val art = dfP(basePath)
-    val present = dfArtPresent.computeIfAbsent(basePath, _ => {
-      val hp = new org.apache.hadoop.fs.Path(art)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
-    }).booleanValue
-    // both branches checkpoint: the frame is joined per trigger, and
-    // re-scanning the 9M-row artifact each time measured 1-2 s/trigger
-    // slower than the materialized read — the artifact's win is the
-    // FIRST use (a pruned scan vs the 20-30 s postings aggregation)
-    if (present) s.read.schema(dfSchema).parquet(art)
+    requireCurrent(s, basePath)
+    s.read.schema(dfSchema).parquet(dfP(basePath))
       .select("sb", "s", "df_base").localCheckpoint(false)
-    else s.read.schema(postSchema).parquet(post(basePath))
-      .groupBy("sb", "s").agg(count(lit(1)).as("df_base"))
-      .localCheckpoint(false)
   }
 
   /** COMPACTION — fold the delta into a fresh base at `outPath`,

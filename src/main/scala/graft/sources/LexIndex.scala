@@ -51,10 +51,9 @@ object LexIndex {
   // explicit read schemas (the DupIndex discipline): a df-capped
   // write over a tiny-vocab corpus can keep ZERO postings, and a
   // zero-row partitioned write leaves only _SUCCESS — nothing for
-  // schema inference. `imp` (r9) is the posting's exact build-time
-  // BM25 contribution in integer micro-units (bm25CU) — the
-  // max-score pruning bound; pre-r9 indexes read it as NULL and
-  // simply never take the pruned path (no _summary either).
+  // schema inference. `imp` is the posting's exact build-time BM25
+  // contribution in integer micro-units (bm25CU) — the max-score
+  // pruning bound.
   private val postSchema = org.apache.spark.sql.types.StructType.fromDDL(
     "tok STRING, doc_id BIGINT, dl DOUBLE, tf DOUBLE, df DOUBLE, imp BIGINT, tb BIGINT")
   private val deltaSchema = org.apache.spark.sql.types.StructType.fromDDL(
@@ -68,11 +67,6 @@ object LexIndex {
     * only `tb=*` posting directories. */
   private def summaryP(path: String) = s"$path/_summary"
   private def statsP(path: String) = s"$path/_stats"
-
-  private def pathExists(s: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
-  }
 
   /** Tokenize + df-cap + write the bucket-partitioned postings;
     * returns the stats metadata. One corpus tokenize pass feeds both
@@ -124,8 +118,7 @@ object LexIndex {
         // θ̂ refinement accumulates per-doc partial sums across the
         // query's tokens' seed lists driver-side (a LOWER bound on
         // each doc's true score), lifting θ̂ far above the single-
-        // token bound on multi-token queries. Pre-r11 summaries read
-        // NULL here (explicit schema) → refinement simply off.
+        // token bound on multi-token queries
         expr("transform(top, x -> x.id)").as("topdocs"),
         bucket(col("tok")).as("tb"))
       .write.mode(SaveMode.Overwrite).partitionBy("tb").parquet(summaryP(path))
@@ -198,7 +191,7 @@ object LexIndex {
     // has no delta yet — base-only serving is the correct answer,
     // not PATH_NOT_FOUND (the DupIndex.residents rule)
     val delta =
-      if (pathExists(s, deltaPath)) slice(deltaPath, deltaSchema)
+      if (Sources.exists(s, deltaPath)) slice(deltaPath, deltaSchema)
       else base.limit(0)
     val all = base.unionByName(
       delta.join(base.select("tok").distinct(), Seq("tok"), "left_semi"))
@@ -291,12 +284,11 @@ object LexIndex {
     * construction, so they contribute nothing — exactly the batch
     * branch's kept-semi-join semantics.
     *
-    * When the index carries its r9 max-score side tables and the
-    * serving stats still equal the persisted build stats, the probe
-    * takes the PRUNED two-phase path ([[probePruned]]) — provably
-    * equal-ranking, candidate-bounded. Otherwise (over-cap query
-    * batch, pre-r9 index, delta-grown stats, k past the persisted
-    * seed depth) it runs the unpruned single-pass plan. */
+    * When the serving stats still equal the persisted build stats,
+    * the probe takes the PRUNED two-phase path ([[probePruned]]) —
+    * provably equal-ranking, candidate-bounded. Otherwise (over-cap
+    * query batch, delta-grown stats, k past the persisted seed depth)
+    * it runs the unpruned single-pass plan. */
   def probe(s: SparkSession, path: String, stats: LexStats,
       qtok: DataFrame, k: Int): DataFrame = {
     val (pruned, unpruned) = probePaths(s, path, stats, qtok, k)
@@ -421,12 +413,11 @@ object LexIndex {
     * plan (never the stored imp), so ranking equality is structural;
     * pruning only ever REMOVES rows of docs certified below θ.
     * Returns None (→ unpruned fallback) when: the footprint is
-    * over-cap, the index predates the side tables, the serving stats
-    * have drifted from the persisted build stats (delta-grown index —
-    * imp would no longer bound the live contribution), k exceeds the
-    * persisted seed depth, the pair cap trips, no query has a
-    * non-essential token (pruning would only add passes), or the
-    * candidate set exceeds [[CandMax]]. */
+    * over-cap, the serving stats have drifted from the persisted
+    * build stats (delta-grown index — imp would no longer bound the
+    * live contribution), k exceeds the persisted seed depth, the pair
+    * cap trips, no query has a non-essential token (pruning would
+    * only add passes), or the candidate set exceeds [[CandMax]]. */
   private[graft] def probePruned(s: SparkSession, path: String, stats: LexStats,
       q: DataFrame, pairs: Seq[(Long, String)], tbOf: Map[String, Long],
       toks: Option[Seq[String]], tbs: Seq[Long], k: Int): Option[DataFrame] = {
@@ -438,13 +429,12 @@ object LexIndex {
       sys.env.getOrElse("SPARK_GRAFT_LEX_PRUNE", "auto"))
     if (mode == "off") return None
     if (toks.isEmpty || k < 1 || k > TopImpsN) return None
-    if (!buildStats(s, path).contains(stats)) return None
+    if (buildStats(s, path) != stats) return None
     val summRows = s.read.schema(summSchema).parquet(summaryP(path))
       .filter(col("tb").isin(tbs: _*)).filter(col("tok").isin(toks.get: _*))
       .select("tok", "df", "topimps", "topdocs").collect()
     val summ = summRows.map(r => r.getString(0) -> r.getSeq[Long](2).toArray).toMap
-    val seeds = summRows.iterator.filter(!_.isNullAt(3))
-      .map(r => r.getString(0) -> r.getSeq[Long](3).toArray).toMap
+    val seeds = summRows.map(r => r.getString(0) -> r.getSeq[Long](3).toArray).toMap
     val dfOf = summRows.map(r => r.getString(0) -> r.getLong(1)).toMap
     val ess = essentialSplit(pairs, summ, k, seeds)
     val essSet = ess.toSet
@@ -493,8 +483,8 @@ object LexIndex {
     * a subset of its doc's non-negative contributions, hence a lower
     * bound on that doc's true score, so ≥ k foreign docs truly score
     * ≥ θ̂₂. On multi-token queries (b) sits far above (a), growing
-    * the non-essential prefix — the crossover lever `seedDocs`
-    * empty (pre-r11 summary) falls back to (a) alone. */
+    * the non-essential prefix — the crossover lever. Empty
+    * `seedDocs` leaves (a) alone. */
   private[graft] def essentialSplit(pairs: Seq[(Long, String)],
       topimps: Map[String, Array[Long]], k: Int,
       seedDocs: Map[String, Array[Long]] = Map.empty): Seq[(Long, String)] =
@@ -545,16 +535,13 @@ object LexIndex {
     }
 
   /** Persisted build stats, memoized per index snapshot (keyed on the
-    * tiny _stats dir's fingerprint — a rebuild rewrites it). None for
-    * pre-r9 indexes. */
-  private val statsCache = new graft.Memo.DirMemo[Option[LexStats]]
-  private def buildStats(s: SparkSession, path: String): Option[LexStats] =
+    * tiny _stats dir's fingerprint — a rebuild rewrites it). A root
+    * without `_stats` is not this tree's layout: the read fails. */
+  private val statsCache = new graft.Memo.DirMemo[LexStats]
+  private def buildStats(s: SparkSession, path: String): LexStats =
     statsCache.getOrElseUpdate(s, statsP(path), "lexstats") {
-      if (!pathExists(s, statsP(path)) || !pathExists(s, summaryP(path))) None
-      else {
-        val r = s.read.parquet(statsP(path)).collect()(0)
-        Some(LexStats(r.getAs[Long]("n_docs"), r.getAs[Long]("sum_dl")))
-      }
+      val r = s.read.parquet(statsP(path)).collect()(0)
+      LexStats(r.getAs[Long]("n_docs"), r.getAs[Long]("sum_dl"))
     }
 
   /** Hard cap on the distinct query tokens a probe will COLLECT to

@@ -53,39 +53,23 @@ object Maintenance {
   final case class Verdict(index: String, action: String,
       trips: Long, deltaBatches: Long)
 
-  private def exists(s: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
-  }
-
   /** Gate trips recorded in a decision log (absent log = no trips —
-    * a sink that never committed a non-empty trigger; a log written
-    * before a flag column existed counts zero for that flag rather
-    * than throwing, so maintenance keeps running over pre-upgrade
-    * logs). mergeSchema: a log dir MIXING pre- and post-upgrade batch
-    * partitions can infer the OLD schema from one footer and silently
-    * hide new-flag columns (dropping their trips from the count) —
-    * the log is tiny (one row per trigger), so the merged-footer read
-    * costs nothing. */
+    * a sink that never committed a non-empty trigger). Every sink
+    * writes all of its flags on every logged trigger
+    * ([[graft.streaming.IngestStream]], [[graft.streaming.AdmitStream]],
+    * [[graft.streaming.LexIngestStream]]), so a log missing one is
+    * not this tree's and the read fails on it. */
   private def trips(s: SparkSession, logPath: String, flags: String*): Long =
-    if (!exists(s, logPath)) 0L
-    else {
-      val log = s.read.option("mergeSchema", "true").parquet(logPath)
-      val present = flags.filter(log.columns.contains)
-      if (present.isEmpty) 0L
-      else log.filter(present.map(col).reduce(_ || _)).count()
-    }
+    if (!Sources.exists(s, logPath)) 0L
+    else s.read.parquet(logPath).filter(flags.map(col).reduce(_ || _)).count()
 
-  /** Distinct `batch=` partition values of a delta root. An
-    * existing-but-empty delta (all-dup / all-quarantined triggers)
-    * has only _SUCCESS markers — nothing to infer a schema from, so
-    * it counts as zero rather than throwing. */
+  /** Distinct `batch=` partition values of a delta root. Explicit
+    * schema: an existing-but-empty delta (all-dup / all-quarantined
+    * triggers) has only _SUCCESS markers and counts zero. */
   private def deltaBatches(s: SparkSession, deltaPath: String): Long =
-    if (!exists(s, deltaPath)) 0L
-    else
-      try s.read.parquet(deltaPath).select("batch").distinct().count()
-      catch { case e: org.apache.spark.sql.AnalysisException
-          if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") => 0L }
+    if (!Sources.exists(s, deltaPath)) 0L
+    else s.read.schema("batch BIGINT").parquet(deltaPath)
+      .select("batch").distinct().count()
 
   /** The ANN rebuild corpus: resident vectors of base + delta (their
     * stored `ed` IS the embedding) plus the quarantined batches —
@@ -93,14 +77,13 @@ object Maintenance {
     * sees their geometry. */
   def annCorpus(s: SparkSession, basePath: String, deltaPath: String,
       quarantinePath: String): DataFrame = {
+    // explicit schema: an existing-but-empty root (all triggers
+    // quarantined, or none parked) holds only _SUCCESS markers and
+    // reads as zero rows
     def part(p: String, c: String) =
-      if (!exists(s, p)) None
-      else
-        // existing-but-empty root (all triggers quarantined, or none
-        // parked): only _SUCCESS markers, nothing to infer from
-        try Some(s.read.parquet(p).select(col("vec_id"), col(c).as("embedding")))
-        catch { case e: org.apache.spark.sql.AnalysisException
-            if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") => None }
+      if (!Sources.exists(s, p)) None
+      else Some(s.read.schema(s"vec_id BIGINT, $c ARRAY<FLOAT>").parquet(p)
+        .select(col("vec_id"), col(c).as("embedding")))
     val parts = (part(basePath, "ed") ++ part(deltaPath, "ed") ++
       part(quarantinePath, "embedding")).toSeq
     require(parts.nonEmpty,

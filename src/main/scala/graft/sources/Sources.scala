@@ -13,6 +13,14 @@ import org.apache.spark.sql.types.StructType
   */
 object Sources {
 
+  /** Whether `path` exists, resolved through Hadoop's FileSystem —
+    * on a remote Hadoop-compatible FS (the 100 TB deployments) a
+    * java.io.File check would silently report the path absent. */
+  def exists(s: SparkSession, path: String): Boolean = {
+    val hp = new org.apache.hadoop.fs.Path(path)
+    hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
+  }
+
   /** CSV with explicit schema + header. PERMISSIVE keeps bad rows
     * null-padded rather than failing a 1000-executor job hours in;
     * pair with a quality-gate filter (Relational.q12) downstream. */

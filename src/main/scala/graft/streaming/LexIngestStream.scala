@@ -86,10 +86,8 @@ object LexIngestStream {
   def foldStats(s: org.apache.spark.sql.SparkSession, logPath: String,
       base: LexStats): LexStats = {
     // no log yet (sink started, no non-empty trigger committed) is a
-    // legitimate serving state = base stats — resolved through
-    // Hadoop's FileSystem (the DupIndex.residents remote-FS rule)
-    val hp = new org.apache.hadoop.fs.Path(logPath)
-    if (!hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)) base
+    // legitimate serving state = base stats
+    if (!Sources.exists(s, logPath)) base
     else {
       val r = s.read.parquet(logPath)
         .agg(sum("n_docs_admitted"), sum("sum_dl_admitted")).collect()(0)

@@ -62,7 +62,7 @@ object UpsertStream {
       if (!b.isEmpty) { // idle triggers and replayed empties are no-ops
         val touched = b.select(BucketCol).distinct().collect().map(_.getInt(0))
         val existing =
-          if (new java.io.File(tableDir).exists())
+          if (Sources.exists(spark, tableDir))
             spark.read.parquet(tableDir)
               // partition pruning: only the touched buckets are read
               .filter(col(BucketCol).isin(touched.map(Integer.valueOf).toSeq: _*))

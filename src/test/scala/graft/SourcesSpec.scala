@@ -548,63 +548,6 @@ class SourcesSpec extends AnyFunSuite {
     }
   }
 
-  test("dup index probe heals pre-upgrade roots (no stored sh column) on read") {
-    import spark.implicits._
-    // a base+delta built BEFORE postings carried the xxhash64 column:
-    // an explicit-schema read would surface sh = NULL, the hash-keyed
-    // probe join would match zero residents, and every near-dup would
-    // be silently ADMITTED — the worst admission failure. readPost's
-    // layout branch must derive the hash on read instead.
-    val docs = Tables(spark, sf, "documents").select("doc_id", "text")
-    val isNew = pmod(col("doc_id"), lit(10)) === 7
-    val base = docs.filter(!isNew)
-    val batchDocs = docs.filter(isNew).as[(Long, String)].collect().toSeq
-    val (d12, probeB) = batchDocs.splitAt(batchDocs.size / 2)
-    val (d1, d2) = d12.splitAt(d12.size / 2)
-    val dir = tmp("shv2"); val delta = tmp("shv2d")
-    val old = tmp("shv1"); val oldDelta = tmp("shv1d")
-    sources.DupIndex.writeFrom(spark, base, dir)
-    sources.DupIndex.appendDelta(spark, dir, delta, d1.toDF("doc_id", "text"), 1L)
-    // pre-upgrade layout: identical postings/delta minus the stored
-    // hash column (what a pre-r12 build left on disk); hot copies as-is
-    spark.read.parquet(s"$dir/post").drop("sh")
-      .write.mode("overwrite").partitionBy("sb").parquet(s"$old/post")
-    spark.read.parquet(delta).drop("sh")
-      .write.mode("overwrite").partitionBy("batch", "sb").parquet(oldDelta)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
-    org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(s"$dir/hot"),
-      fs, new org.apache.hadoop.fs.Path(s"$old/hot"), false, conf)
-    // the UPGRADE PATH: the pre-upgrade sink keeps running post-upgrade
-    // code and appends batch 2 to the SAME delta root — batch=1 has no
-    // stored sh, batch=2 does. A single-footer sniff landing on the new
-    // batch would read sh = NULL for all of batch 1 and silently admit
-    // its near-dups; readPost's per-batch split must heal it.
-    sources.DupIndex.appendDelta(spark, old, oldDelta, d2.toDF("doc_id", "text"), 2L)
-    sources.DupIndex.appendDelta(spark, dir, delta, d2.toDF("doc_id", "text"), 2L)
-    val want = sources.DupIndex.probe(spark, dir,
-      probeB.toDF("doc_id", "text"), Some(delta)).collect()
-    val got = sources.DupIndex.probe(spark, old,
-      probeB.toDF("doc_id", "text"), Some(oldDelta)).collect()
-    assert(want.exists(_.getString(1) == "dup_of_corpus"),
-      "vacuous: no dup verdicts in the layout comparison")
-    assert(got.map(_.toString).sorted.sameElements(want.map(_.toString).sorted),
-      "pre-upgrade/mixed-layout root probed differently from the current layout")
-    // sharp mixed-batch probe: RE-IDENTIFIED copies of batch 1's docs
-    // (same text, shifted ids — probe's replay guard drops same-id
-    // matches) are exact dups of batch-1 residents only; if the mixed
-    // read surfaces sh = NULL for the old batch, these flip to "novel"
-    val copies = d1.map { case (id, t) => (id + 10000000L, t) }
-    val selfWant = sources.DupIndex.probe(spark, dir,
-      copies.toDF("doc_id", "text"), Some(delta)).collect()
-    val selfGot = sources.DupIndex.probe(spark, old,
-      copies.toDF("doc_id", "text"), Some(oldDelta)).collect()
-    assert(selfWant.count(_.getString(1) == "dup_of_corpus") >= d1.size / 2,
-      "vacuous: re-identified batch-1 copies found too few dups")
-    assert(selfGot.map(_.toString).sorted.sameElements(selfWant.map(_.toString).sorted),
-      "old-batch residents probed differently through the mixed-layout delta")
-  }
-
   test("dup index hot gate trips on an accumulated template and compaction equals a rebuild") {
     import spark.implicits._
     // base: 600 docs sharing a template shingle (df 600 <= cap, so
@@ -618,7 +561,8 @@ class SourcesSpec extends AnyFunSuite {
     val bdir = tmp("hotbase"); val ddir = tmp("hotdelta")
     val cdir = tmp("compacted"); val rdir = tmp("rebuilt")
     sources.DupIndex.writeFrom(spark, base.toDF("doc_id", "text"), bdir)
-    sources.DupIndex.appendDelta(spark, bdir, ddir, delta.toDF("doc_id", "text"), 1L)
+    val sbs1 = sources.DupIndex.appendDelta(spark, bdir, ddir,
+      delta.toDF("doc_id", "text"), 1L)
     // priced once per root, the production discipline
     val bdf = Some(sources.DupIndex.baseDf(spark, bdir))
     val gate = sources.DupIndex.hotGate(spark, ddir, bdf).collect()(0)
@@ -627,9 +571,13 @@ class SourcesSpec extends AnyFunSuite {
     assert(gate.getAs[Long]("n_delta_rows") > 0L, "gate cost metric missing")
     // the TRIGGER-SCOPED gate (the streaming face's form): scoping to
     // the batch's own delta-partition buckets still trips — the
-    // crossing occurrence lives in those buckets by construction
-    val sbs1 = sources.DupIndex.deltaBuckets(spark, ddir, 1L)
-    assert(sbs1.nonEmpty && sbs1.size <= sources.DupIndex.NBuckets)
+    // crossing occurrence lives in those buckets by construction.
+    // appendDelta's returned footprint is the batch partition's own
+    // bucket set on disk
+    val onDisk = spark.read.parquet(ddir).filter(col("batch") === 1L)
+      .select("sb").distinct().as[Long].collect().sorted.toSeq
+    assert(sbs1.nonEmpty && sbs1 == onDisk,
+      s"appendDelta footprint $sbs1 differs from the written partition's buckets $onDisk")
     val scoped = sources.DupIndex.hotGate(spark, ddir, bdf, Some(sbs1)).collect()(0)
     assert(scoped.getAs[Boolean]("rebuild") &&
       scoped.getAs[Long]("n_newly_hot") == gate.getAs[Long]("n_newly_hot"),
@@ -683,10 +631,8 @@ class SourcesSpec extends AnyFunSuite {
       "compacted df artifact differs from rebuild")
   }
 
-  test("base-df artifact equals the postings aggregation and a pre-upgrade root falls back") {
+  test("base-df artifact equals the postings aggregation") {
     import spark.implicits._
-    // distinct dirs throughout: baseDf memoizes artifact presence per
-    // root, so the legacy path needs its own root, not a mutated copy
     val docs = (0L until 40L).map(i =>
       (i, s"alpha bravo charlie d${i % 7} e${i % 3} f$i common tail one two"))
     val dir = tmp("dfart")
@@ -699,18 +645,25 @@ class SourcesSpec extends AnyFunSuite {
       .select("sb", "s", "df_base")
     assert(art.exceptAll(agg).isEmpty && agg.exceptAll(art).isEmpty,
       "df artifact differs from the postings aggregation")
-    // pre-upgrade root: same corpus written fresh, artifact REMOVED
-    // before first read — baseDf must fall back to aggregating and
-    // produce identical rows (the readPost healing discipline)
-    val old = tmp("dfart_old")
-    sources.DupIndex.writeFrom(spark, docs.toDF("doc_id", "text"), old)
-    def rmr(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rmr); f.delete() }
-    rmr(new java.io.File(s"$old/df"))
-    val legacy = sources.DupIndex.baseDf(spark, old)
-      .select("sb", "s", "df_base")
-    assert(legacy.exceptAll(agg).isEmpty && agg.exceptAll(legacy).isEmpty,
-      "pre-upgrade fallback differs from the artifact path")
+  }
+
+  test("a dup index root without df/ is rejected: probe and baseDf ask for a writeFrom rebuild") {
+    import spark.implicits._
+    // a root from before the current layout lacks df/ (pre-r13) and
+    // maybe the stored sh (pre-r12); reading it must fail, not admit
+    val docs = (0L until 40L).map(i =>
+      (i, s"alpha bravo charlie d${i % 7} e${i % 3} f$i common tail one two"))
+    val dir = tmp("nodf")
+    sources.DupIndex.writeFrom(spark, docs.toDF("doc_id", "text"), dir)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dir/df"))
+    def rejected(what: String)(f: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](f)
+      assert(e.getMessage.contains("rebuild it with DupIndex.writeFrom"),
+        s"$what: unexpected rejection message: ${e.getMessage}")
+    }
+    rejected("probe")(sources.DupIndex.probe(spark, dir,
+      docs.take(5).toDF("doc_id", "text")).collect())
+    rejected("baseDf")(sources.DupIndex.baseDf(spark, dir))
   }
 
   test("max-score essential split: certified θ seeds and the ascending-σ prefix rule") {
