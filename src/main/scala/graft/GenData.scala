@@ -37,8 +37,8 @@ import org.apache.spark.sql.functions._
   *    Heaps' law (V = 44·N^0.49 over N total tokens) with token
   *    ranks drawn Zipf(s=1) via the exact inverse CDF r = ⌊V^u⌋, so
   *    the corpus has real stopwords (df-capped out), a mid-frequency
-  *    body, and a long rare tail — the family WAND/max-score pruning
-  *    exists for, and the r8 verdict's missing stress axis.
+  *    body, and a long rare tail — the r8 verdict's missing stress
+  *    axis.
   */
 object GenData {
   def main(args: Array[String]): Unit = {

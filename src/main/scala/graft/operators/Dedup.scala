@@ -907,8 +907,6 @@ object Dedup {
       labels = updated.drop("_prev")
       rounds += 1
     }
-    if (sys.env.contains("GRAFT_DEBUG"))
-      System.err.println(s"[q65] converged in $rounds rounds, ${parts} parts")
     require(changed == 0,
       s"q65 label propagation did not converge in $maxRounds rounds " +
         "(component diameter exceeds the cap); raise maxRounds")

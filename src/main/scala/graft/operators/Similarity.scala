@@ -1608,17 +1608,16 @@ object Similarity {
                ORDER BY cosine DESC, eval_id) AS rn FROM p)
        WHERE rn = 1 ORDER BY vec_id"""
 
-  /** PROBE VOLUME PLAN (r9) — the max-score engagement gate's
-    * economics as a batch operator: per query doc (the QueryMax
-    * contract), how many distinct tokens it carries, how many the
-    * HybDfMaxPpm cap indexes vs drops, and the unpruned posting
-    * volume Σdf its lexical probe would scan+aggregate — exactly the
-    * number [[graft.sources.LexIndex.probePruned]]'s saved/essential
-    * gate prices from the _summary dfs. An operator answers "should
-    * pruning engage for THIS workload on THIS corpus" before an
-    * index is even built. All-integer (exact long df compare — at
-    * 100 TB the 1e6-scaled double compare of q160's build filter
-    * would leave 2^53; this operator is the integer-exact spelling).
+  /** PROBE VOLUME PLAN (r9) — the lexical probe's cost as a batch
+    * operator: per query doc (the QueryMax contract), how many
+    * distinct tokens it carries, how many the HybDfMaxPpm cap indexes
+    * vs drops, and the posting volume Σdf its
+    * [[graft.sources.LexIndex.probe]] would scan+aggregate. An
+    * operator answers "how much posting volume does THIS workload
+    * read on THIS corpus" before an index is even built.
+    * All-integer (exact long df compare — at 100 TB the 1e6-scaled
+    * double compare of q160's build filter would leave 2^53; this
+    * operator is the integer-exact spelling).
     *
     * Scale shape: one corpus tokenize → vocab-sized df agg; the
     * query side is QueryMax docs' tokens joined against it; no

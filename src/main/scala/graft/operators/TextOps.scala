@@ -1369,8 +1369,8 @@ object TextOps {
     * count, occurrence mass (exact integer ppm share), and how many
     * tokens the HybDfMaxPpm cap drops — so "where does the df cap
     * bite on THIS corpus" is a query, not prose. q80 is the top-K
-    * head; this is the full distribution the max-score engagement
-    * gate's economics depend on (a Zipf corpus concentrates
+    * head; this is the full distribution the lexical probe's posting
+    * volume depends on (a Zipf corpus concentrates
     * occurrence mass in few capped stopwords + a long low-df tail;
     * the salad family piles everything into two buckets).
     *

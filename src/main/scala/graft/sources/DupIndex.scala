@@ -146,9 +146,9 @@ object DupIndex {
     * (doc_id, s) as sb-partitioned postings under `root/post`, plus
     * the per-shingle base-df ARTIFACT under `root/df` — the hot-gate
     * comparand is static between compactions, so it is index STATE,
-    * not a per-sink recomputation (the LexIndex `_summary`
-    * discipline; at x300 the lazy-plan version cost every sink start
-    * a ~20-30 s base-postings aggregation on first gate use). */
+    * not a per-sink recomputation (at x300 the lazy-plan version
+    * cost every sink start a ~20-30 s base-postings aggregation on
+    * first gate use). */
   private def writePostings(kept: DataFrame, root: String): Unit = {
     val k = kept.localCheckpoint(false, // 3 consumers: sizes, rows, df
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)

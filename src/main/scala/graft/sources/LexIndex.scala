@@ -51,22 +51,11 @@ object LexIndex {
   // explicit read schemas (the DupIndex discipline): a df-capped
   // write over a tiny-vocab corpus can keep ZERO postings, and a
   // zero-row partitioned write leaves only _SUCCESS — nothing for
-  // schema inference. `imp` is the posting's exact build-time BM25
-  // contribution in integer micro-units (bm25CU) — the max-score
-  // pruning bound.
+  // schema inference
   private val postSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "tok STRING, doc_id BIGINT, dl DOUBLE, tf DOUBLE, df DOUBLE, imp BIGINT, tb BIGINT")
+    "tok STRING, doc_id BIGINT, dl DOUBLE, tf DOUBLE, df DOUBLE, tb BIGINT")
   private val deltaSchema = org.apache.spark.sql.types.StructType.fromDDL(
     "tok STRING, doc_id BIGINT, dl DOUBLE, tf DOUBLE, batch BIGINT, tb BIGINT")
-  private val summSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "tok STRING, df BIGINT, topimps ARRAY<BIGINT>, topdocs ARRAY<BIGINT>, tb BIGINT")
-
-  /** Side-table paths under the index root. The leading underscore
-    * hides them from the posting scans' file listing (the
-    * _spark_metadata convention), so `read.parquet(path)` still sees
-    * only `tb=*` posting directories. */
-  private def summaryP(path: String) = s"$path/_summary"
-  private def statsP(path: String) = s"$path/_stats"
 
   /** Tokenize + df-cap + write the bucket-partitioned postings;
     * returns the stats metadata. One corpus tokenize pass feeds both
@@ -78,7 +67,6 @@ object LexIndex {
   /** [[write]] over any (doc_id, text) frame — specs build bases
     * from corpus subsets to exercise the delta path. */
   def writeFrom(s: SparkSession, docs: DataFrame, path: String): LexStats = {
-    import s.implicits._
     val tkE = graft.operators.Dedup.tokensExpr
     val st = docs.agg(count(lit(1)).as("n"),
       sum(expr(s"size($tkE)").cast("long")).as("sdl")).collect()(0)
@@ -92,38 +80,12 @@ object LexIndex {
       .filter(col("df") * lit(1000000.0) <=
         lit(Similarity.HybDfMaxPpm.toDouble) * lit(stats.nDocs.toDouble))
     post.join(broadcast(kept), "tok")
-      // build-time exact contribution — the pruning bound AND (since
-      // the pruned probe recomputes c_u from the same df/tf/dl with
-      // the same expression) provably equal to what a probe under the
-      // build stats scores
-      .withColumn("imp", Similarity.bm25CU(
-        lit(stats.nDocs.toDouble), lit(stats.sumDl.toDouble),
-        col("df"), col("tf"), col("dl")))
       .withColumn("tb", bucket(col("tok")))
-      .select("tb", "tok", "doc_id", "dl", "tf", "df", "imp")
+      .select("tb", "tok", "doc_id", "dl", "tf", "df")
       // (tok, doc_id)-sorted within each bucket file: row-group
       // min/max stats then prune tok.isin probes inside the bucket
       .sortWithinPartitions("tok", "doc_id")
       .write.mode(SaveMode.Overwrite).partitionBy("tb").parquet(path)
-    // the max-score side tables (written AFTER the postings overwrite
-    // wiped the root): per-token top impacts for θ seeding + the
-    // build stats that gate pruning eligibility at probe time
-    s.read.schema(postSchema).parquet(path)
-      .groupBy("tok")
-      .agg(count(lit(1)).as("df"),
-        graft.functions.TopK.topkL(TopImpsN + 1)(col("imp"), col("doc_id")).as("top"))
-      .select(col("tok"), col("df"),
-        expr("transform(top, x -> x.score)").as("topimps"),
-        // the seed DOC IDS matching topimps index-for-index: the r11
-        // θ̂ refinement accumulates per-doc partial sums across the
-        // query's tokens' seed lists driver-side (a LOWER bound on
-        // each doc's true score), lifting θ̂ far above the single-
-        // token bound on multi-token queries
-        expr("transform(top, x -> x.id)").as("topdocs"),
-        bucket(col("tok")).as("tb"))
-      .write.mode(SaveMode.Overwrite).partitionBy("tb").parquet(summaryP(path))
-    Seq((stats.nDocs, stats.sumDl)).toDF("n_docs", "sum_dl")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(statsP(path))
     stats
   }
 
@@ -282,51 +244,13 @@ object LexIndex {
     * QueryMax rule). Only the buckets the query tokens hash into are
     * listed or read; dropped (hot) tokens have no postings by
     * construction, so they contribute nothing — exactly the batch
-    * branch's kept-semi-join semantics.
-    *
-    * When the serving stats still equal the persisted build stats,
-    * the probe takes the PRUNED two-phase path ([[probePruned]]) —
-    * provably equal-ranking, candidate-bounded. Otherwise (over-cap
-    * query batch, delta-grown stats, k past the persisted seed depth)
-    * it runs the unpruned single-pass plan. */
+    * branch's kept-semi-join semantics. One footprint collect, then
+    * one single-pass plan: bucket-pruned scan → score → bounded TopK. */
   def probe(s: SparkSession, path: String, stats: LexStats,
       qtok: DataFrame, k: Int): DataFrame = {
-    val (pruned, unpruned) = probePaths(s, path, stats, qtok, k)
-    pruned.getOrElse(unpruned)
-  }
-
-  /** Both probe plans over one shared footprint — the parity spec's
-    * handle (the unpruned frame is lazy; only the pruned attempt runs
-    * its bounded driver-side work). For a PairMax-bounded trigger the
-    * whole footprint — pairs, distinct tokens, buckets — comes from
-    * ONE collect (r9: the pruned path's extra per-trigger jobs are
-    * exactly what made it lose to the single-pass plan at x10/x30);
-    * only a backfill-shaped over-cap batch pays the two legacy
-    * footprint collects. */
-  private[graft] def probePaths(s: SparkSession, path: String, stats: LexStats,
-      qtok: DataFrame, k: Int): (Option[DataFrame], DataFrame) = {
     val q = qtok.select(col("query_id"), col("tok"),
       bucket(col("tok")).as("tb")).localCheckpoint(false)
-    val pairRows = q.select("query_id", "tok", "tb").distinct()
-      .limit(PairMax + 1).collect()
-    if (pairRows.length <= PairMax) {
-      val toks0 = pairRows.map(_.getString(1)).distinct.toSeq
-      val toks = if (toks0.length <= ProbeTokMax) Some(toks0) else None
-      val tbs = pairRows.map(_.getLong(2)).distinct.toSeq
-      val pairs = pairRows.map(r => (r.getLong(0), r.getString(1))).toSeq
-      val tbOf = pairRows.map(r => r.getString(1) -> r.getLong(2)).toMap
-      (probePruned(s, path, stats, q, pairs, tbOf, toks, tbs, k),
-        probeUnpruned(s, path, stats, q, toks, tbs, k))
-    } else {
-      val (toks, tbs) = probeFootprint(q)
-      (None, probeUnpruned(s, path, stats, q, toks, tbs, k))
-    }
-  }
-
-  /** The unpruned single-pass plan — the pruned path's fallback AND
-    * its parity reference (SourcesSpec asserts row-equality). */
-  private[graft] def probeUnpruned(s: SparkSession, path: String, stats: LexStats,
-      q: DataFrame, toks: Option[Seq[String]], tbs: Seq[Long], k: Int): DataFrame = {
+    val (toks, tbs) = probeFootprint(q)
     val scored = tokSlice(s.read.schema(postSchema).parquet(path), toks, tbs)
       .join(hintSmall(q.select("query_id", "tok"), toks), "tok")
       .filter(col("doc_id") =!= col("query_id"))
@@ -335,214 +259,6 @@ object LexIndex {
         col("df"), col("tf"), col("dl")))
     Similarity.lexRankOf(scored, k)
   }
-
-  /** Seed depth persisted per token: top (TopImpsN+1) posting impacts
-    * descending. Pruning engages for k ≤ TopImpsN - 1... strictly, for
-    * k < TopImpsN + 1 with the self-doc margin: θ̂ uses topimps(k)
-    * (0-based), so k+1 impacts must exist — at most one of those k+1
-    * docs is the query's own, leaving ≥ k foreign docs at score ≥ θ̂. */
-  val TopImpsN = 32
-
-  /** Driver-collected (query_id, tok) pair cap for the pruned path's
-    * per-query split — the ProbeTokMax doctrine applied to pairs. */
-  val PairMax = 65536
-
-  /** Candidate (query_id, doc_id) broadcast cap: past it the trigger
-    * is backfill-shaped and the unpruned shuffle plan is the right
-    * one anyway. ~2M keys ≈ 32 MB broadcast. */
-  val CandMax = 2000000L
-
-  /** Engagement gates, both computed driver-side from the _summary
-    * dfs (exact, no posting scan). Pruning's saving is the SAVED
-    * pair-level posting volume (Σ df over non-essential indexed
-    * (query, token) pairs); its cost is ∝ the ESSENTIAL pair-level
-    * volume (the extra candidate scan + broadcast) plus ~2 fixed
-    * jobs. Engage when saved ≥ [[PruneMinSaved]] AND saved ≥
-    * [[PruneSavedFactor]]·essential.
-    *
-    * r11 RE-MEASURE (lex scenario A/B, 20-query triggers, local[32],
-    * regenerated zipf corpora, seed-refined θ̂ making the split
-    * maximally favorable to pruning): pruned-on LOSES at every
-    * tested scale — 3.7 vs 3.1 (x10), 6.3 vs 3.4 (x30), 5.5 vs 3.9
-    * (x100) s/trigger. The structural reason: [[Similarity
-    * .lexRankOf]]'s bounded TopK aggregate takes map-side PARTIALS,
-    * so the per-row shuffle the two-phase plan kills was never paid
-    * — doomed rows die in the partial hash update (~ns each), while
-    * the rescore phase re-reads every query token's postings
-    * regardless (exactness needs candidate docs' non-essential
-    * contributions, so no posting IO is ever saved). What remains
-    * savable is the dead rows' score-compute + hash-update, which
-    * only matters when the saved volume reaches ~10⁹ rows/trigger —
-    * the floor is set THERE now. The r9 4M floor came from one
-    * x100 pass whose 31% win did not survive re-measurement on
-    * regenerated corpora (host conditions, not plan structure —
-    * both A/B arms re-read 2026-08-16). The two-phase machinery
-    * (and the θ̂ certificates) stay: parity-proved, forceable via
-    * graft.lex.prune=on, and the designed path for posting volumes
-    * this harness cannot reach. */
-  val PruneMinSaved = 1000000000L
-  val PruneSavedFactor = 4L
-
-  /** MAX-SCORE TWO-PHASE PRUNED PROBE (WAND's batch-shaped sibling —
-    * Broder et al.'s essential-list split, Turtle & Flood max-score;
-    * document-at-a-time pointer walks don't map to a distributed
-    * scan, the essential/non-essential term split does):
-    *
-    *  1. θ̂ seeding, driver-side, integer micro-units: the max of the
-    *     single-token bound (the token's (k+1)-th best persisted
-    *     posting impact — k+1 docs carry ≥ it on that token alone,
-    *     at most one the query's own) and the r11 seed-doc bound
-    *     (k-th best per-doc partial sum across the query tokens'
-    *     persisted seed lists — see [[essentialSplit]]). Both are
-    *     certified lower bounds on the true k-th best foreign score.
-    *  2. essential split, driver-side: tokens sorted ascending by
-    *     σ(t) = max posting impact; the largest prefix with Σσ < θ̂
-    *     is non-essential — a doc matching ONLY those tokens scores
-    *     < θ̂ ≤ θ and can never enter the top k. Every result doc
-    *     must match ≥ 1 essential (typically rare, high-idf) token.
-    *  3. candidate pass: scan ONLY the essential tokens' postings
-    *     (tok.isin row-group pruning over the (tok, doc_id)-sorted
-    *     bucket files) → distinct (query_id, doc_id) candidates.
-    *  4. exact rescoring: the full query slice joins the candidate
-    *     set with a BROADCAST left-semi BEFORE the aggregate, so the
-    *     hot (non-essential) tokens' corpus-proportional posting rows
-    *     die map-side instead of shuffling into lexRankOf — the
-    *     measured |Q|·n retrieve wall at x30/x100 (SURVEY §4.2).
-    *
-    * Scoring recomputes c_u with the SAME bm25CU tree as the unpruned
-    * plan (never the stored imp), so ranking equality is structural;
-    * pruning only ever REMOVES rows of docs certified below θ.
-    * Returns None (→ unpruned fallback) when: the footprint is
-    * over-cap, the serving stats have drifted from the persisted
-    * build stats (delta-grown index — imp would no longer bound the
-    * live contribution), k exceeds the persisted seed depth, the pair
-    * cap trips, no query has a non-essential token (pruning would
-    * only add passes), or the candidate set exceeds [[CandMax]]. */
-  private[graft] def probePruned(s: SparkSession, path: String, stats: LexStats,
-      q: DataFrame, pairs: Seq[(Long, String)], tbOf: Map[String, Long],
-      toks: Option[Seq[String]], tbs: Seq[Long], k: Int): Option[DataFrame] = {
-    // A/B hook: SPARK_GRAFT_LEX_PRUNE=off measures the unpruned plan
-    // on the same corpus/index (the lex scenario's comparison column);
-    // =on drops the volume gate (the parity spec's small corpora).
-    // System property first — env vars can't be set per-test in-JVM.
-    val mode = sys.props.getOrElse("graft.lex.prune",
-      sys.env.getOrElse("SPARK_GRAFT_LEX_PRUNE", "auto"))
-    if (mode == "off") return None
-    if (toks.isEmpty || k < 1 || k > TopImpsN) return None
-    if (buildStats(s, path) != stats) return None
-    val summRows = s.read.schema(summSchema).parquet(summaryP(path))
-      .filter(col("tb").isin(tbs: _*)).filter(col("tok").isin(toks.get: _*))
-      .select("tok", "df", "topimps", "topdocs").collect()
-    val summ = summRows.map(r => r.getString(0) -> r.getSeq[Long](2).toArray).toMap
-    val seeds = summRows.map(r => r.getString(0) -> r.getSeq[Long](3).toArray).toMap
-    val dfOf = summRows.map(r => r.getString(0) -> r.getLong(1)).toMap
-    val ess = essentialSplit(pairs, summ, k, seeds)
-    val essSet = ess.toSet
-    // exact pair-level volumes off the summary dfs: saved = what dies
-    // map-side; essential = the candidate pass's scan + broadcast
-    // bound (so no cand.count() job is ever needed — candidates ≤
-    // essVol by construction)
-    val essVol = ess.iterator.map { case (_, t) => dfOf(t) }.sum
-    val savedVol = pairs.iterator.collect {
-      case p @ (_, t) if dfOf.contains(t) && !essSet(p) => dfOf(t) }.sum
-    if (savedVol == 0L) return None // nothing prunable
-    if (mode != "on" &&
-      (savedVol < PruneMinSaved || savedVol < PruneSavedFactor * essVol)) return None
-    if (essVol > CandMax) return None
-    import s.implicits._
-    val essDf = ess.toDF("query_id", "tok")
-    val essToks = ess.map(_._2).distinct
-    val essTbs = essToks.map(tbOf).distinct
-    val cand = tokSlice(s.read.schema(postSchema).parquet(path), Some(essToks), essTbs)
-      .select("tok", "doc_id")
-      .join(broadcast(essDf), "tok")
-      .select("query_id", "doc_id").distinct()
-    val scored = tokSlice(s.read.schema(postSchema).parquet(path), toks, tbs)
-      .join(broadcast(q.select("query_id", "tok")), "tok")
-      .join(broadcast(cand), Seq("query_id", "doc_id"), "left_semi")
-      .filter(col("doc_id") =!= col("query_id"))
-      .withColumn("c_u", Similarity.bm25CU(
-        lit(stats.nDocs.toDouble), lit(stats.sumDl.toDouble),
-        col("df"), col("tf"), col("dl")))
-    Some(Similarity.lexRankOf(scored, k))
-  }
-
-  /** The driver-side split (pure, unit-tested): per query, θ̂ from the
-    * persisted seeds, then the ascending-σ prefix rule. Returns the
-    * ESSENTIAL (query_id, tok) pairs; tokens absent from the index
-    * (σ = 0: OOV or df-capped) are never essential — they have no
-    * postings to read. All arithmetic in exact longs.
-    *
-    * θ̂ is the max of two certified lower bounds on the k-th best
-    * FOREIGN score: (a) the single-token bound — some token's
-    * (k+1)-th best posting impact (k+1 docs carry ≥ it on that token
-    * alone; at most one is the query's own); (b) the r11 SEED-DOC
-    * bound — per-doc partial sums accumulated across the query
-    * tokens' persisted (impact, doc) seed lists, self-doc dropped
-    * exactly, k-th largest partial taken. Every partial is a sum of
-    * a subset of its doc's non-negative contributions, hence a lower
-    * bound on that doc's true score, so ≥ k foreign docs truly score
-    * ≥ θ̂₂. On multi-token queries (b) sits far above (a), growing
-    * the non-essential prefix — the crossover lever. Empty
-    * `seedDocs` leaves (a) alone. */
-  private[graft] def essentialSplit(pairs: Seq[(Long, String)],
-      topimps: Map[String, Array[Long]], k: Int,
-      seedDocs: Map[String, Array[Long]] = Map.empty): Seq[(Long, String)] =
-    pairs.groupBy(_._1).toSeq.flatMap { case (qid, ps) =>
-      val toks = ps.map(_._2).distinct
-      val sigma = toks.flatMap(t => topimps.get(t).flatMap(_.headOption).map(t -> _))
-      val theta1 = toks.iterator.map(t =>
-        topimps.get(t).filter(_.length > k).map(_(k)).getOrElse(0L))
-        .foldLeft(0L)(math.max)
-      val theta2 = if (seedDocs.isEmpty) 0L else {
-        val acc = scala.collection.mutable.LongMap.empty[Long]
-        toks.foreach { t =>
-          (topimps.get(t), seedDocs.get(t)) match {
-            case (Some(imps), Some(docs)) =>
-              val m = math.min(imps.length, docs.length)
-              var i = 0
-              while (i < m) {
-                val d = docs(i)
-                if (d != qid) acc(d) = acc.getOrElse(d, 0L) + imps(i)
-                i += 1
-              }
-            case _ => ()
-          }
-        }
-        if (acc.size < k) 0L
-        else {
-          val vs = acc.values.toArray
-          java.util.Arrays.sort(vs)
-          vs(vs.length - k)
-        }
-      }
-      val theta = math.max(theta1, theta2)
-      if (theta <= 0L) sigma.map(ts => qid -> ts._1) // no seed: all indexed toks essential
-      else {
-        val asc = sigma.sortBy(ts => (ts._2, ts._1)) // deterministic order
-        var run = 0L
-        var cut = false
-        val ess = Seq.newBuilder[(Long, String)]
-        asc.foreach { case (t, sg) =>
-          // once one token is essential, every later (≥σ) token is too
-          // — the prefix rule, NOT a per-token test against a frozen
-          // running sum
-          if (cut || run + sg >= theta) { cut = true; ess += (qid -> t) }
-          else run += sg
-        }
-        ess.result()
-      }
-    }
-
-  /** Persisted build stats, memoized per index snapshot (keyed on the
-    * tiny _stats dir's fingerprint — a rebuild rewrites it). A root
-    * without `_stats` is not this tree's layout: the read fails. */
-  private val statsCache = new graft.Memo.DirMemo[LexStats]
-  private def buildStats(s: SparkSession, path: String): LexStats =
-    statsCache.getOrElseUpdate(s, statsP(path), "lexstats") {
-      val r = s.read.parquet(statsP(path)).collect()(0)
-      LexStats(r.getAs[Long]("n_docs"), r.getAs[Long]("sum_dl"))
-    }
 
   /** Hard cap on the distinct query tokens a probe will COLLECT to
     * the driver and inline as a scan-pushdown `isin` literal (and on
@@ -557,13 +273,16 @@ object LexIndex {
     * instead of a forced broadcast of an unbounded frame. */
   val ProbeTokMax = 4096
 
-  /** The probe's driver-bounded footprint: distinct buckets (always),
-    * distinct tokens only while they fit [[ProbeTokMax]]. */
+  /** The probe's driver-bounded footprint: distinct tokens while they
+    * fit [[ProbeTokMax]], distinct buckets always. One collect of the
+    * distinct (tok, tb) rows serves both (tb is a function of tok);
+    * only an over-cap batch adds a second collect of its ≤ [[NBuckets]]
+    * buckets. */
   private def probeFootprint(q: DataFrame): (Option[Seq[String]], Seq[Long]) = {
-    val toks = q.select("tok").distinct().limit(ProbeTokMax + 1)
-      .collect().map(_.getString(0)).toSeq
-    (if (toks.length <= ProbeTokMax) Some(toks) else None,
-      q.select("tb").distinct().collect().map(_.getLong(0)).toSeq)
+    val rows = q.select("tok", "tb").distinct().limit(ProbeTokMax + 1).collect()
+    if (rows.length <= ProbeTokMax)
+      (Some(rows.map(_.getString(0)).toSeq), rows.map(_.getLong(1)).distinct.toSeq)
+    else (None, q.select("tb").distinct().collect().map(_.getLong(0)).toSeq)
   }
 
   /** tb.isin is a PARTITION filter on the bucket directories; the

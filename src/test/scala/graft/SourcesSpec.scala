@@ -189,21 +189,40 @@ class SourcesSpec extends AnyFunSuite {
     assert(drifted.getAs[Double]("batch_mse") > drifted.getAs[Double]("index_mse"))
   }
 
+  /** Write a lexical index over `dir`'s documents under `path` and
+    * probe it with q160's query contract: distinct (query_id, tok)
+    * pairs of the docs with doc_id < 20 (the doc_id ≡ vec_id QueryMax
+    * rule). Asserts the probe equals the in-memory lexical branch
+    * row-for-row and that the root holds postings only. */
+  private def lexProbeEqualsInMemory(dir: String, path: String) = {
+    val stats = sources.LexIndex.write(spark, dir, path)
+    // skip the local filesystem's hidden .crc checksum files
+    val entries = new java.io.File(path).list().toSeq.filterNot(_.startsWith("."))
+    assert(entries.exists(_.startsWith("tb=")) &&
+      entries.forall(e => e.matches("tb=\\d+") || e == "_SUCCESS"),
+      s"lexical index root holds more than tb=* postings and _SUCCESS: ${entries.sorted}")
+    val qtok = Tables(spark, dir, "documents").filter(col("doc_id") < 20)
+      .select(col("doc_id").as("query_id"),
+        explode(expr(operators.Dedup.tokensExpr)).as("tok")).distinct()
+    val got = sources.LexIndex.probe(spark, path, stats, qtok, 10)
+      .localCheckpoint(false)
+    val want = operators.Similarity.lexRank(spark, dir)
+    assert(got.count() > 0, s"probe over $dir returned nothing: vacuous")
+    assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0,
+      s"persisted-index probe over $dir diverges from the in-memory lexical branch")
+    (stats, qtok, got)
+  }
+
   test("persisted lexical index: bucket-pruned probe equals the in-memory BM25 branch row-for-row") {
     TestSpark.withTmpDir("lexindex") { root =>
+      // a natural (zipf) vocabulary: real stopwords df-capped out, a
+      // mid-frequency body and a long rare tail — the driver corpus's
+      // tiny vocabulary has almost none of that structure
+      val zipf = s"$root/zipf"
+      GenData.generate(spark, zipf, 3000, 100, vocabMode = "zipf")
+      lexProbeEqualsInMemory(zipf, s"$root/zipflex")
       val path = s"$root/lex"
-      val stats = sources.LexIndex.write(spark, sf, path)
-      // q160's query contract: distinct (query_id, tok) pairs of the
-      // docs with doc_id < 20 (the doc_id ≡ vec_id QueryMax rule)
-      val qtok = Tables(spark, sf, "documents").filter(col("doc_id") < 20)
-        .select(col("doc_id").as("query_id"),
-          explode(expr(operators.Dedup.tokensExpr)).as("tok")).distinct()
-      val got = sources.LexIndex.probe(spark, path, stats, qtok, 10)
-        .localCheckpoint(false)
-      val want = operators.Similarity.lexRank(spark, sf)
-      assert(got.count() > 0, "probe returned nothing: vacuous")
-      assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0,
-        "persisted-index probe diverges from the in-memory lexical branch")
+      val (stats, qtok, got) = lexProbeEqualsInMemory(sf, path)
       // the probe's posting scan prunes on the tb bucket directories
       // (read off a FRESH probe — the checkpoint above swallowed the
       // plan leaves)
@@ -664,121 +683,5 @@ class SourcesSpec extends AnyFunSuite {
     rejected("probe")(sources.DupIndex.probe(spark, dir,
       docs.take(5).toDF("doc_id", "text")).collect())
     rejected("baseDf")(sources.DupIndex.baseDf(spark, dir))
-  }
-
-  test("max-score essential split: certified θ seeds and the ascending-σ prefix rule") {
-    import graft.sources.LexIndex.essentialSplit
-    val imps = Map(
-      "hot" -> Array(10L, 9L, 8L, 7L),
-      "mid" -> Array(50L, 40L),
-      "rare" -> Array(100L, 95L))
-    // k=1: θ̂ = max of the (k+1)-th impacts with ≥ k+1 postings
-    //   = max(9, 40, 95) = 95; ascending σ (10, 50, 100): 10 < 95,
-    //   10+50 < 95, 60+100 ≥ 95 → only "rare" is essential
-    val ess1 = essentialSplit(
-      Seq((7L, "hot"), (7L, "mid"), (7L, "rare"), (7L, "oov")), imps, k = 1)
-    assert(ess1.toSet == Set((7L, "rare")), s"$ess1")
-    // k=2: "mid" has only 2 impacts (< k+1) so it seeds 0;
-    //   θ̂ = max(8, 0, 0) = 8 — every indexed token is essential
-    //   ("hot" alone: run 0 + σ 10 ≥ 8)
-    val ess2 = essentialSplit(Seq((7L, "hot"), (7L, "mid"), (7L, "rare")), imps, k = 2)
-    assert(ess2.toSet == Set((7L, "hot"), (7L, "mid"), (7L, "rare")), s"$ess2")
-    // no seed at all (k deeper than every list): all indexed tokens
-    // essential, OOV never essential
-    val ess3 = essentialSplit(Seq((1L, "mid"), (1L, "oov")), imps, k = 5)
-    assert(ess3.toSet == Set((1L, "mid")), s"$ess3")
-    // per-query independence: query 2 (hot+mid) seeds its own
-    // θ̂ = max(9, 40) = 40, so "hot" (σ=10 < 40) is non-essential
-    // there — a doc matching only "hot" can't reach query 2's top-1
-    val ess4 = essentialSplit(Seq((1L, "rare"), (2L, "hot"), (2L, "mid")), imps, k = 1)
-    assert(ess4.toSet == Set((1L, "rare"), (2L, "mid")), s"$ess4")
-  }
-
-  test("seed-doc θ refinement: partial sums flip the split, self-doc dropped exactly, short seed lists never false-certify") {
-    import graft.sources.LexIndex.essentialSplit
-    // doc 1 tops BOTH tokens: its partial sum 20+100 = 120 dwarfs
-    // every single-token bound
-    val imps = Map("a" -> Array(20L, 18L), "b" -> Array(100L, 15L))
-    val seeds = Map("a" -> Array(1L, 2L), "b" -> Array(1L, 3L))
-    // WITHOUT seeds, k=1: θ̂₁ = max(a(1)=18, b(1)=15) = 18; ascending
-    // σ (a=20, b=100): 0+20 ≥ 18 → "a" essential, so "b" too —
-    // nothing saved
-    val noSeed = essentialSplit(Seq((9L, "a"), (9L, "b")), imps, k = 1)
-    assert(noSeed.toSet == Set((9L, "a"), (9L, "b")), s"$noSeed")
-    // WITH seeds: foreign partials d1=120, d2=18, d3=15 → θ̂₂ = 120;
-    // now 0+20 < 120 → "a" non-essential, "b" (20+100 ≥ 120)
-    // essential — the refinement's pure win: same index, same query,
-    // HALF the candidate scan
-    val withSeed = essentialSplit(Seq((9L, "a"), (9L, "b")), imps, k = 1, seeds)
-    assert(withSeed.toSet == Set((9L, "b")), s"$withSeed")
-    // SELF-DOC: the query IS doc 1 — its own 120 partial must not
-    // certify θ̂ (the k foreign docs it promises would include
-    // itself). Foreign partials: d2=18, d3=15 → θ̂₂ = 18 = θ̂₁ → the
-    // conservative all-essential split returns
-    val self = essentialSplit(Seq((1L, "a"), (1L, "b")), imps, k = 1, seeds)
-    assert(self.toSet == Set((1L, "a"), (1L, "b")), s"$self")
-    // fewer than k distinct foreign seed docs → θ̂₂ degrades to 0,
-    // never a false certificate (θ̂₁ = 0 too at k=2: both lists have
-    // exactly 2 impacts, k+1 = 3 > length)
-    val tiny = essentialSplit(Seq((1L, "a")), imps, k = 2,
-      Map("a" -> Array(1L, 2L)))
-    assert(tiny.toSet == Set((1L, "a")), s"$tiny")
-  }
-
-  test("max-score pruned probe equals the unpruned plan on a natural-vocabulary corpus") {
-    TestSpark.withTmpDir("lexwand") { root =>
-      // this corpus sits below the measured PruneMinVol engagement
-      // gate — force the pruned plan so parity is what's under test
-      sys.props("graft.lex.prune") = "on"
-      try lexWandBody(root)
-      finally sys.props.remove("graft.lex.prune")
-    }
-  }
-
-  private def lexWandBody(root: String): Unit = {
-    locally {
-      val dir = s"$root/corpus"
-      GenData.generate(spark, dir, 3000, 100, vocabMode = "zipf")
-      val path = s"$root/lex"
-      val stats = sources.LexIndex.write(spark, dir, path)
-      // q160's query contract (doc_id < 20, the QueryMax rule) so the
-      // in-memory lexRank comparison below is apples-to-apples
-      val qtok = Tables(spark, dir, "documents").filter(col("doc_id") < 20)
-        .select(col("doc_id").as("query_id"),
-          explode(expr(operators.Dedup.tokensExpr)).as("tok")).distinct()
-      val (pruned, unpruned) = sources.LexIndex.probePaths(spark, path, stats, qtok, 10)
-      // the natural vocabulary has prunable structure: the two-phase
-      // path must actually ENGAGE here (isDefined ⟹ the split left
-      // some non-essential token on some query and the candidate set
-      // fit the broadcast cap) — on the tiny-vocab driver corpus it
-      // may legitimately decline and fall back
-      assert(pruned.isDefined, "pruned path declined on the zipf corpus")
-      val got = pruned.get.localCheckpoint(false)
-      val want = unpruned.localCheckpoint(false)
-      assert(got.count() > 0, "pruned probe returned nothing: vacuous")
-      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
-        "max-score pruning changed the ranking")
-      // plan shape: the candidate restriction must reach the scoring
-      // rows as a BROADCAST left-semi BEFORE the ranking aggregate —
-      // a shuffled semi join would re-pay exactly the |Q|·n exchange
-      // the pruning exists to remove (read off a FRESH uncheckpointed
-      // probe, post-execution, through the AQE leaves)
-      val (prunedPlan, _) = sources.LexIndex.probePaths(spark, path, stats, qtok, 10)
-      prunedPlan.get.collect()
-      val planStr = prunedPlan.get.queryExecution.executedPlan.toString
-      assert(planStr.contains("BroadcastHashJoin") && planStr.contains("LeftSemi"),
-        s"pruned probe's candidate semi-join is not broadcast:\n$planStr")
-
-      // drifted serving stats (delta-grown index) must DISABLE pruning:
-      // the persisted impacts no longer bound live contributions
-      val grown = sources.LexIndex.LexStats(stats.nDocs + 10, stats.sumDl + 500)
-      val (prunedGrown, _) = sources.LexIndex.probePaths(spark, path, stats.copy(nDocs = grown.nDocs), qtok, 10)
-      assert(prunedGrown.isEmpty, "pruned path engaged under drifted stats")
-      // and the public probe (pruned) still equals the in-memory
-      // lexical branch on this corpus — the q160 contract
-      val mem = operators.Similarity.lexRank(spark, dir)
-      assert(got.exceptAll(mem).isEmpty && mem.exceptAll(got).isEmpty,
-        "pruned probe diverges from the in-memory lexical branch")
-    }
   }
 }
