@@ -21,15 +21,33 @@ import graft.sources.Sources
   *   admission → q74 packing → content-hash SHARDS + q170 manifest +
   *   q79 data card + a per-stage DECISION LOG.
   *
-  * Artifact layout under `out`:
+  * Artifact layout under `out` (both builds unless marked):
   *   staged/documents.parquet    normalized corpus (+ embeddings copy)
+  *   quarantine/                 intake rows normalize cannot repair,
+  *                               with their quarantine_reason
   *   shards/shard=<k>/…          packed train docs with (bin_id,
   *                               bin_offset) — the shipped training set
   *   corpus/documents.parquet    the shipped docs as a corpus dir (the
   *                               card's input, and a re-auditable table)
+  *   corpus/media.parquet        the shipped docs' payloads (media intake)
   *   manifest.parquet            per-shard doc/token/byte balance audit
   *   card.parquet                per-language release data card
   *   decisions.parquet           one row per stage: counts in/out + detail
+  *   dupindex/                   base: near-dup index over staged, the
+  *                               admission base increments probe
+  *   phashes/                    base: admitted images' phashes (media
+  *                               intake), the family-admission base
+  *   mixstats/                   base: per-language (avail, shipped)
+  *                               tokens, the drift gate's base row
+  *   verdicts/batch=<id>/        increment: DupIndex.probe verdicts
+  *
+  * An increment also writes under `prev`, each batch-partitioned
+  * (batch=<id>, dynamic overwrite, so a replay rewrites only its own):
+  *   md5delta/     staged md5s, the exact-dup admission axis
+  *   dupdelta/     novel docs' postings, the near-dup admission axis
+  *   nextbin/      the next free bin id, the next increment's bin base
+  *   phashdelta/   surviving admitted images' phashes (media intake)
+  *   mixdelta/     per-language (avail, shipped) tokens
   *
   * Every stage is the EXISTING operator (same expression trees, same
   * thresholds), so the composed artifact cannot drift from the
@@ -40,7 +58,7 @@ import graft.sources.Sources
   * scale-audited operator; shards are written partitioned by the
   * content-hash shard key so 1000 readers consume them independently.
   *
-  * usage: runMain graft.BuildCorpus <inDir> <outDir>
+  * usage: runMain graft.BuildCorpus <inDir> <outDir> [<prevDir> <incId>]
   */
 object BuildCorpus {
 
@@ -85,18 +103,6 @@ object BuildCorpus {
     def rows: Seq[(Int, String, Long, Long, String, Double)] = buf.toSeq
   }
 
-  /** Stages 0-1, shared by the full build and [[incremental]]:
-    * intake audit → normalize-or-quarantine into `out`/staged +
-    * `out`/quarantine. Rows the contract can't REPAIR are quarantined
-    * with reasons rather than shipped or crashed on: normalize fixes
-    * control bytes / whitespace / case, but a null or duplicated id,
-    * null language, or text that normalizes to nothing has no
-    * defensible downstream semantics (a null text would NPE the
-    * tokenizers; a duplicated id makes every doc_id join fan out).
-    * Normalization is q85's CORE as a direct projection
-    * ([[TextOps.normalizeCol]]) — never a doc_id join, which a
-    * duplicated intake id would fan out and a null id would drop
-    * from. Returns (n_intake_docs, n_staged_docs). */
   /** Broadcast ceiling for the duplicated-id list, in DISTINCT dup
     * ids (the q41 SzBroadcastMaxDocs sizing rationale: ~16 B/row ≈
     * 320 MB at the ceiling — with the ~2× hash-relation overhead,
@@ -134,6 +140,18 @@ object BuildCorpus {
     }
   }
 
+  /** Stages 0-1, shared by the full build and [[incremental]]:
+    * intake audit → normalize-or-quarantine into `out`/staged +
+    * `out`/quarantine. Rows the contract can't REPAIR are quarantined
+    * with reasons rather than shipped or crashed on: normalize fixes
+    * control bytes / whitespace / case, but a null or duplicated id,
+    * null language, or text that normalizes to nothing has no
+    * defensible downstream semantics (a null text would NPE the
+    * tokenizers; a duplicated id makes every doc_id join fan out).
+    * Normalization is q85's CORE as a direct projection
+    * ([[TextOps.normalizeCol]]) — never a doc_id join, which a
+    * duplicated intake id would fan out and a null id would drop
+    * from. Returns (n_intake_docs, n_staged_docs). */
   private def intakeAndStage(s: SparkSession, in: String, out: String,
       decisions: Ledger)
       : (Long, Long) = {
@@ -288,17 +306,10 @@ object BuildCorpus {
     // a main-thread failure must not leave the side threads submitting
     // jobs (or writing dupindex/) behind the caller's back
     stopSidesOnFailure(s, sideTag, idxThread, embThread) {
-      // 3. the gate: exact-dup canonical ∧ near-dup canonical ∧ clean ∧
-      // quality, with the content-keyed split — both ledger counts in
-      // ONE agg over the checkpointed frame (r9); own wall captured
-      // here, appended in id order after the embedding thread joins
+      // 3. the gate ([[gateStep]]); own wall captured here, appended
+      // in id order after the embedding thread joins
       val tg0 = System.nanoTime
-      val gate = Sampling.q68(s, staged).localCheckpoint(false)
-      val gateTrain = gate.filter(col("split") === "train").select("doc_id")
-      val gateAgg = gate.agg(count(lit(1)).as("all"),
-        coalesce(sum(when(col("split") === "train", 1L).otherwise(0L)), lit(0L))
-          .as("tr")).collect()(0)
-      val nGateTrain = gateAgg.getLong(1)
+      val (gateTrain, nGateAll, nGateTrain) = gateStep(s, staged)
       val tGate = (System.nanoTime - tg0) / 1e9
 
       // 4. decontamination: exact 8-gram (q69) ∪ fuzzy shingle-jaccard
@@ -319,24 +330,17 @@ object BuildCorpus {
       decisions.timed((3, "semantic_decon", sd.getLong(0), sd.getLong(1),
         "q168 vs eval vectors (overlapped)"), tSd)
       decisions.timed((4, "gate_keep", nStaged, nGateTrain,
-        s"q68 kept_all_splits=${gateAgg.getLong(0)}"), tGate)
+        s"q68 kept_all_splits=$nGateAll"), tGate)
       decisions.timed((5, "decontaminate", nGateTrain, nGateTrain - nDropped,
         s"q69|q86 flagged_in_gate=$nDropped"), tDecon)
 
-      // 4m. MEDIA stages (r12, only when the intake ships a
-      // media.parquet): docs carrying an IMAGE payload are caption×
-      // image training pairs, and two more gates apply before packing —
-      //  - the q156 cross-modal admission (caption quality ≥ CapQual ∧
-      //    real-header image with both dims ≥ MinDim) over the REAL
-      //    payload decode, not the ASCII stub class;
-      //  - the q171 image-family canonical keep: phash banding pairs →
-      //    connected families → only the min-id member ships (a crawl's
-      //    re-encoded logo family must not ship N times).
-      // Non-image media (wav/stub-audio) passes through un-gated — the
-      // audio family gate is q157's follow-up, not this stage. Scale
-      // shape: two embarrassingly-parallel decode passes (meta, phash)
-      // + q171's edge-sized machinery; verdicts are doc-id row sets.
-      val mediaDrop = mediaStages(s, in, staged, out, decisions)
+      // 4m. MEDIA stages ([[mediaStages]], only when the intake ships a
+      // media.parquet). The base has no resident images: every admitted
+      // hash lands in out/phashes, the family-admission base of later
+      // increments.
+      val mediaDrop = Option.when(hasMedia(s, in))(mediaStages(s, in, staged,
+        resident = None, _.write.mode(SaveMode.Overwrite).parquet(s"$out/phashes"),
+        decisions))
 
       // 5. mixture admission + packing over the survivors (q75's core
       // over the ALREADY-CHECKPOINTED gate set minus the drop set — the
@@ -355,49 +359,14 @@ object BuildCorpus {
         if (mediaDrop.isDefined) keepFinal.count() else nGateTrain - nDropped
       val packed = Sampling.assembleKept(s, staged, keepFinal).localCheckpoint(false)
 
-      // 6. shards: the shipped rows, content-hash sharded so the split
-      // coordinate and the shard coordinate stay independent (q170's
-      // ShardExpr), carrying the packing layout
+      // 6-7. shards, corpus dir, manifest, card ([[shipStage]])
       val stDocs = Tables(s, staged, "documents")
-      val shipped = stDocs
-        .join(packed, "doc_id")
-        .withColumn("shard", expr(Sampling.ShardExpr))
-        .select("shard", "doc_id", "text", "lang", "source",
-          "n_tokens", "bin_id", "bin_offset")
-        .localCheckpoint(false) // 4 consumers: shards, corpus, manifest, stats
-      shipped.write.mode(SaveMode.Overwrite).partitionBy("shard")
-        .parquet(s"$out/shards")
-      shipped.select(col("doc_id"), col("text"), col("lang"), col("source"),
-          length(col("text")).cast("long").as("n_chars"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$out/corpus/documents.parquet")
-
-      // 7. manifest over the SHIPPED rows (q170's aggregation), card
-      // over the shipped corpus dir (q79)
-      Sampling.manifestOf(shipped.select(col("shard"), col("n_tokens"),
-          octet_length(col("text")).cast("long").as("n_bytes")))
-        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$out/manifest.parquet")
-      TextOps.q79(s, s"$out/corpus")
-        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$out/card.parquet")
-      // ONE stats action over the checkpointed shipped rows feeds both
-      // ledger lines (MEASURED shard count, not the NShards constant: a
-      // sub-NShards shipment writes fewer content-hash shards)
-      val shTot = shipped.agg(coalesce(sum("n_tokens"), lit(0L)).as("t"),
-        countDistinct("shard").as("sh"), countDistinct("bin_id").as("b"),
-        count(lit(1)).as("n")).collect()(0)
+      val (shipped, shTot) = shipStage(s, in, out, stDocs, packed)
       val nPacked = shTot.getLong(3)
       decisions += ((8, "mix_pack", nKeep, nPacked,
         s"bins=${shTot.getLong(2)}"))
       decisions += ((9, "shards", nPacked, shTot.getLong(1),
         s"tokens=${shTot.getLong(0)} of_max_shards=${Sampling.NShards}"))
-
-      // shipped media rides with the shipped docs: the corpus dir is
-      // itself multimodal (q155/q157/q171 probes of the SHIPPED dir see
-      // exactly the admitted, family-deduped payloads)
-      if (hasMedia(s, in))
-        s.read.parquet(Tables.rawPath(in, "media"))
-          .join(shipped.select("doc_id"), "doc_id")
-          .select("doc_id", "payload")
-          .write.mode(SaveMode.Overwrite).parquet(s"$out/corpus/media.parquet")
 
       // 8. the dup-index admission base, running concurrently since
       // the staging step — wait for it here so the ledger rows stay
@@ -501,17 +470,50 @@ object BuildCorpus {
   private def hasMedia(s: SparkSession, in: String): Boolean =
     Sources.exists(s, Tables.rawPath(in, "media"))
 
-  /** The media stages (see the 4m call site): cross-modal admission
-    * over the REAL payload decode + image-family canonical keep.
-    * Returns the doc-id drop set when `in` ships a media table (None
-    * otherwise), appending ledger rows 6 (media_gate) and 7
-    * (image_families). Persists the ADMITTED images' phashes at
-    * `out`/phashes (all gate-kept family members, canonical or not —
-    * 8 B per image) so [[incremental]] probes family admission
-    * without re-decoding the base corpus. */
+  /** The gate (ledger row 4), shared by both builds: q68 (exact-dup canonical
+    * ∧ near-dup canonical ∧ clean ∧ quality, with the content-keyed
+    * split) over the staged corpus, checkpointed, and both ledger
+    * counts from ONE aggregate over the checkpoint (r9: every count
+    * action is a job launch). Returns (train ids, all rows, train rows). */
+  private def gateStep(s: SparkSession, staged: String): (DataFrame, Long, Long) = {
+    val gate = Sampling.q68(s, staged).localCheckpoint(false)
+    val isTrain = col("split") === "train"
+    val agg = gate.agg(count(lit(1)).as("all"),
+      coalesce(sum(when(isTrain, 1L).otherwise(0L)), lit(0L)).as("tr")).collect()(0)
+    (gate.filter(isTrain).select("doc_id"), agg.getLong(0), agg.getLong(1))
+  }
+
+  /** The media stages (ledger rows 6-7), shared by both builds, for an
+    * intake that ships a media table. Docs carrying an IMAGE payload
+    * are caption×image training pairs, and two more gates apply before
+    * packing; non-image media (wav/stub-audio) passes through un-gated
+    * (the audio family gate is q157's follow-up):
+    *
+    *  6. media_gate — q156's caption×image admission (caption quality
+    *     ≥ CapQual ∧ real-header image with both dims ≥ MinDim) over
+    *     the REAL payload decode, not the ASCII stub class, captions
+    *     scored on the staged corpus;
+    *  7. image_families — when `resident` (the admitted-image hashes
+    *     already shipped: base + prior increments, via [[readPhashes]])
+    *     is set, gate-kept images within hamming ≤ PhashHam of a
+    *     resident image drop first — their family's canonical already
+    *     shipped (the DupIndex admission discipline on the phash axis,
+    *     [[operators.Dedup.hammingProbe]]). Families then form among
+    *     the survivors (q171's core: phash banding pairs → connected
+    *     families → min-id canonical) and only canonicals ship (a
+    *     crawl's re-encoded logo family must not ship N times).
+    *
+    * `keepHashes` persists the survivors' hashes (ALL admitted family
+    * members, canonical or not — 8 B per image), the family-admission
+    * base of later increments: the base build writes `out`/phashes,
+    * an increment its `prev`/phashdelta batch (the probe reads
+    * exclude that batch, so a crash replay is a pure function of
+    * pre-trigger state). Appends ledger rows 6 and 7 and returns the
+    * doc-id drop set. Scale shape: two embarrassingly-parallel decode
+    * passes (meta, phash) + q171's edge-sized machinery. */
   private def mediaStages(s: SparkSession, in: String, staged: String,
-      out: String, decisions: Ledger): Option[DataFrame] = {
-    if (!hasMedia(s, in)) return None
+      resident: Option[DataFrame], keepHashes: DataFrame => Unit,
+      decisions: Ledger): DataFrame = {
     import s.implicits._
     val pl = s.read.parquet(Tables.rawPath(in, "media"))
       .select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
@@ -529,7 +531,7 @@ object BuildCorpus {
           lit(false)).as("caption_ok"),
         (least(col("width"), col("height")) >= Multimodal.MinDim).as("media_ok"))
       .withColumn("kept", col("caption_ok") && col("media_ok"))
-      .localCheckpoint(false) // 3 consumers: ledger agg, families, drop set
+      .localCheckpoint(false) // 3 consumers: ledger agg, hashes, drop set
     val va = verdict.agg(count(lit(1)).as("n"),
       coalesce(sum(when(col("kept"), 1L).otherwise(0L)), lit(0L)).as("k"),
       coalesce(sum(when(!col("caption_ok"), 1L).otherwise(0L)), lit(0L)).as("cf"),
@@ -537,29 +539,41 @@ object BuildCorpus {
       .collect()(0)
     decisions += ((6, "media_gate", va.getLong(0), va.getLong(1),
       s"q156 real-decode caption_fail=${va.getLong(2)} media_fail=${va.getLong(3)}"))
-    // family formation over the ADMITTED images (q171's core: phash
-    // banding pairs -> connected families -> min-id canonical). ONE
-    // decode+hash pass feeds the family step AND the persisted phash
-    // artifact the incremental build's family admission probes.
+    // ONE decode+hash pass over the ADMITTED images feeds the resident
+    // probe, the family step and the persisted hashes
     val hashed = Multimodal.imageHashes(
       pl.toDF("doc_id", "payload")
         .join(verdict.filter(col("kept")).select("doc_id"), "doc_id")
         .as[(Long, Array[Byte])])
-      .localCheckpoint(false) // 2 consumers: families, phash write
-    hashed.write.mode(SaveMode.Overwrite).parquet(s"$out/phashes")
-    val fams = Multimodal.q171OfHashes(hashed.withColumnRenamed("phash", "simhash"))
+      .localCheckpoint(false) // consumers: families + hash write (+ probe, survivors)
+    val residentDup = resident.map(r => Dedup.hammingProbe(
+        hashed.withColumnRenamed("phash", "simhash"),
+        r.withColumnRenamed("phash", "simhash"), Multimodal.PhashHam)
+      .localCheckpoint(false)) // 2 consumers: survivor anti join, drop set
+    val survivors = residentDup.fold(hashed)(d =>
+      hashed.join(d, Seq("doc_id"), "left_anti")
+        .localCheckpoint(false)) // 2 consumers: families, hash write
+    keepHashes(survivors)
+    val fams = Multimodal.q171OfHashes(survivors.withColumnRenamed("phash", "simhash"))
       .localCheckpoint(false) // 2 consumers: ledger agg, drop set
     val fa = fams.agg(count(lit(1)).as("n"),
       coalesce(sum(when(col("is_canonical"), 1L).otherwise(0L)), lit(0L)).as("c"),
       countDistinct("family_id").as("f")).collect()(0)
-    decisions += ((7, "image_families", fa.getLong(0), fa.getLong(1),
-      s"q171 families=${fa.getLong(2)} dropped_members=${fa.getLong(0) - fa.getLong(1)}"))
-    Some(verdict.filter(!col("kept")).select("doc_id")
-      .unionByName(fams.filter(!col("is_canonical")).select("doc_id"))
-      .localCheckpoint(false))
+    // an increment's row counts its gate-kept images in, resident dups
+    // included; the base's counts its family members
+    val (famIn, residentNote) =
+      if (residentDup.isEmpty) (fa.getLong(0), "")
+      else (va.getLong(1), s"resident_dups=${va.getLong(1) - fa.getLong(0)} ")
+    decisions += ((7, "image_families", famIn, fa.getLong(1),
+      s"q171 ${residentNote}families=${fa.getLong(2)} " +
+        s"dropped_members=${fa.getLong(0) - fa.getLong(1)}"))
+    (verdict.filter(!col("kept")).select("doc_id") +: residentDup.toSeq :+
+        fams.filter(!col("is_canonical")).select("doc_id"))
+      .reduce(_ unionByName _)
+      .localCheckpoint(false)
   }
 
-  /** Resident admitted-image hashes for [[mediaStagesIncremental]]'s
+  /** Resident admitted-image hashes for [[mediaStages]]'s
     * family-admission probe: the base build's persisted phashes plus
     * prior increments' phashdelta batches (own batch excluded —
     * replay purity). [[run]] writes `phashes/` whenever its intake
@@ -577,78 +591,45 @@ object BuildCorpus {
         .select("doc_id", "phash"))
   }
 
-  /** The INCREMENT's media stages (r13 — the full build gained its
-    * stages 6/7 in r12; without this, an increment shipping media
-    * bypassed the cross-modal gate and family dedup entirely):
-    *
-    *  6. media_gate — q156's caption×image admission over the REAL
-    *     payload decode, captions scored on the increment's staged
-    *     corpus (identical semantics to the full build's stage 6);
-    *  7. image_families — family admission in TWO steps: (a) gate-kept
-    *     images within hamming ≤ PhashHam of a RESIDENT admitted image
-    *     (base + prior increments, via [[readPhashes]]) drop — their
-    *     family's canonical already shipped (the DupIndex admission
-    *     discipline on the phash axis, [[operators.Dedup.hammingProbe]]);
-    *     (b) intra-increment families form among the survivors and
-    *     only canonicals ship. Survivors' hashes (ALL admitted family
-    *     members, the base-build convention) land under
-    *     `prev`/phashdelta/batch=<incId> by dynamic overwrite — the
-    *     probe reads exclude this batch, so a crash replay is a pure
-    *     function of pre-trigger state and the NEXT increment dedups
-    *     against this one.
-    *
-    * Returns the increment's media drop set (None without a media
-    * table). */
-  private def mediaStagesIncremental(s: SparkSession, in: String,
-      staged: String, prev: String, incId: Long,
-      decisions: Ledger): Option[DataFrame] = {
-    if (!hasMedia(s, in)) return None
-    import s.implicits._
-    val pl = s.read.parquet(Tables.rawPath(in, "media"))
-      .select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
-    val meta = Multimodal.decodeDs(pl)
-      .filter(col("format").isin("png", "jpeg"))
-      .select("doc_id", "width", "height")
-    val cap = TextOps.q60(s, staged).select(col("doc_id"), col("quality_score"))
-    val verdict = meta.join(cap, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("quality_score") >= lit(Multimodal.CapQual.toDouble),
-          lit(false)).as("caption_ok"),
-        (least(col("width"), col("height")) >= Multimodal.MinDim).as("media_ok"))
-      .withColumn("kept", col("caption_ok") && col("media_ok"))
-      .localCheckpoint(false) // 3 consumers: ledger agg, hashes, drop set
-    val va = verdict.agg(count(lit(1)).as("n"),
-      coalesce(sum(when(col("kept"), 1L).otherwise(0L)), lit(0L)).as("k"),
-      coalesce(sum(when(!col("caption_ok"), 1L).otherwise(0L)), lit(0L)).as("cf"),
-      coalesce(sum(when(!col("media_ok"), 1L).otherwise(0L)), lit(0L)).as("mf"))
-      .collect()(0)
-    decisions += ((6, "media_gate", va.getLong(0), va.getLong(1),
-      s"q156 real-decode caption_fail=${va.getLong(2)} media_fail=${va.getLong(3)}"))
-    val hashed = Multimodal.imageHashes(
-      pl.toDF("doc_id", "payload")
-        .join(verdict.filter(col("kept")).select("doc_id"), "doc_id")
-        .as[(Long, Array[Byte])])
-      .localCheckpoint(false) // 3 consumers: probe, survivors, count
-    val corpusDup = operators.Dedup.hammingProbe(
-        hashed.withColumnRenamed("phash", "simhash"),
-        readPhashes(s, prev, incId).withColumnRenamed("phash", "simhash"),
-        Multimodal.PhashHam)
-      .localCheckpoint(false) // 2 consumers: survivor anti join, drop set
-    val survivors = hashed.join(corpusDup, Seq("doc_id"), "left_anti")
-      .localCheckpoint(false) // 2 consumers: families, delta write
-    Sources.overwriteBatch(survivors.withColumn("batch", lit(incId)), s"$prev/phashdelta")
-    val fams = Multimodal.q171OfHashes(survivors.withColumnRenamed("phash", "simhash"))
-      .localCheckpoint(false) // 2 consumers: ledger agg, drop set
-    val fa = fams.agg(count(lit(1)).as("n"),
-      coalesce(sum(when(col("is_canonical"), 1L).otherwise(0L)), lit(0L)).as("c"),
-      countDistinct("family_id").as("f")).collect()(0)
-    decisions += ((7, "image_families", va.getLong(1), fa.getLong(1),
-      s"q171 resident_dups=${va.getLong(1) - fa.getLong(0)} families=${fa.getLong(2)} " +
-        s"dropped_members=${fa.getLong(0) - fa.getLong(1)}"))
-    Some(verdict.filter(!col("kept")).select("doc_id")
-      .unionByName(corpusDup)
-      .unionByName(fams.filter(!col("is_canonical")).select("doc_id"))
-      .localCheckpoint(false))
+  /** The shipping behind ledger rows 8-9, shared by both builds: the packed rows
+    * joined back to `docs` (the caller's staged documents), content-
+    * hash sharded so the split coordinate and the shard coordinate
+    * stay independent (q170's ShardExpr), written as shards/, the
+    * corpus dir (documents, plus the shipped docs' media when the
+    * intake ships any), the manifest (q170's aggregation over the
+    * SHIPPED rows) and the card (q79 over the shipped corpus dir).
+    * Returns the checkpointed shipped rows and ONE totals row over
+    * them, (tokens, shards, bins, docs, max bin_id — null when nothing
+    * ships): the MEASURED shard count, not the NShards constant, since
+    * a sub-NShards shipment writes fewer content-hash shards. */
+  private def shipStage(s: SparkSession, in: String, out: String, docs: DataFrame,
+      packed: DataFrame): (DataFrame, org.apache.spark.sql.Row) = {
+    val shipped = docs.join(packed, "doc_id")
+      .withColumn("shard", expr(Sampling.ShardExpr))
+      .select("shard", "doc_id", "text", "lang", "source",
+        "n_tokens", "bin_id", "bin_offset")
+      .localCheckpoint(false) // 5 consumers: shards, corpus, manifest, totals, media
+    shipped.write.mode(SaveMode.Overwrite).partitionBy("shard").parquet(s"$out/shards")
+    shipped.select(col("doc_id"), col("text"), col("lang"), col("source"),
+        length(col("text")).cast("long").as("n_chars"))
+      .write.mode(SaveMode.Overwrite).parquet(s"$out/corpus/documents.parquet")
+    Sampling.manifestOf(shipped.select(col("shard"), col("n_tokens"),
+        octet_length(col("text")).cast("long").as("n_bytes")))
+      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$out/manifest.parquet")
+    TextOps.q79(s, s"$out/corpus")
+      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$out/card.parquet")
+    val totals = shipped.agg(coalesce(sum("n_tokens"), lit(0L)).as("t"),
+      countDistinct("shard").as("sh"), countDistinct("bin_id").as("b"),
+      count(lit(1)).as("n"), max("bin_id").as("mb")).collect()(0)
+    // shipped media rides with the shipped docs: the corpus dir is
+    // itself multimodal (q155/q157/q171 probes of the SHIPPED dir see
+    // exactly the admitted, family-deduped payloads)
+    if (hasMedia(s, in))
+      s.read.parquet(Tables.rawPath(in, "media"))
+        .join(shipped.select("doc_id"), "doc_id")
+        .select("doc_id", "payload")
+        .write.mode(SaveMode.Overwrite).parquet(s"$out/corpus/media.parquet")
+    (shipped, totals)
   }
 
   private def writeLog(s: SparkSession,
@@ -755,11 +736,9 @@ object BuildCorpus {
     decisions += ((3, "neardup_admission", nStaged, novelIds.count(),
       s"DupIndex.probe batch=$incId"))
 
-    // 4. the intra-delta gate
-    val gate = Sampling.q68(s, staged).localCheckpoint(false)
-    val gateTrain = gate.filter(col("split") === "train").select("doc_id")
-    decisions += ((4, "gate_keep", nStaged, gateTrain.count(),
-      s"q68 kept_all_splits=${gate.count()}"))
+    // 4. the intra-delta gate ([[gateStep]])
+    val (gateTrain, nGateAll, nGateTrain) = gateStep(s, staged)
+    decisions += ((4, "gate_keep", nStaged, nGateTrain, s"q68 kept_all_splits=$nGateAll"))
 
     // 5. decontamination vs the eval slice (prior + delta val/test)
     val tk = expr(graft.operators.Dedup.tokensExpr)
@@ -781,14 +760,17 @@ object BuildCorpus {
       .join(exactDup, Seq("doc_id"), "left_anti")
       .join(flagged, Seq("doc_id"), "left_anti")
       .localCheckpoint(false)
-    decisions += ((5, "decontaminate", gateTrain.count(), keep0.count(),
+    decisions += ((5, "decontaminate", nGateTrain, keep0.count(),
       s"eval-slice grams flagged=${flagged.count()}"))
 
-    // 5m. media stages (r13, ledger ids 6/7 when the increment ships
-    // media — mirroring the full build's gap pattern): cross-modal
-    // gate + family admission against base/prior increments + intra-
-    // increment families; see [[mediaStagesIncremental]]
-    val mediaDrop = mediaStagesIncremental(s, in, staged, prev, incId, decisions)
+    // 5m. media stages ([[mediaStages]], ledger ids 6/7 when the
+    // increment ships media — mirroring the full build's gap pattern),
+    // admitting families against base + prior increments' hashes.
+    // Survivors' hashes land in this increment's prev/phashdelta batch.
+    val mediaDrop = Option.when(hasMedia(s, in))(mediaStages(s, in, staged,
+      Some(readPhashes(s, prev, incId)),
+      h => Sources.overwriteBatch(h.withColumn("batch", lit(incId)), s"$prev/phashdelta"),
+      decisions))
     val keep = mediaDrop
       .foldLeft(keep0)((k, md) => k.join(md, Seq("doc_id"), "left_anti"))
 
@@ -803,38 +785,13 @@ object BuildCorpus {
     val binBase = math.max(shardNext, markerNext)
     val packed = Sampling.packKept(s, staged, keep, binBase).localCheckpoint(false)
 
-    // 9. the increment's shipped artifact
-    val shipped = delta.join(packed, "doc_id")
-      .withColumn("shard", expr(Sampling.ShardExpr))
-      .select("shard", "doc_id", "text", "lang", "source",
-        "n_tokens", "bin_id", "bin_offset")
-      .localCheckpoint(false)
-    shipped.write.mode(SaveMode.Overwrite).partitionBy("shard").parquet(s"$out/shards")
-    shipped.select(col("doc_id"), col("text"), col("lang"), col("source"),
-        length(col("text")).cast("long").as("n_chars"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$out/corpus/documents.parquet")
-    Sampling.manifestOf(shipped.select(col("shard"), col("n_tokens"),
-        octet_length(col("text")).cast("long").as("n_bytes")))
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$out/manifest.parquet")
-    TextOps.q79(s, s"$out/corpus")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$out/card.parquet")
-    val shTot = shipped.agg(coalesce(sum("n_tokens"), lit(0L)).as("t"),
-      countDistinct("shard").as("sh"), countDistinct("bin_id").as("b"),
-      count(lit(1)).as("n"),
-      // an empty shipment consumes no bins: next_bin stays at binBase
-      coalesce(max("bin_id"), lit(binBase - 1L)).as("mb")).collect()(0)
-    // the running last-bin marker the NEXT increment's binBase reads
+    // 9. the increment's shipped artifact ([[shipStage]])
+    val (shipped, shTot) = shipStage(s, in, out, delta, packed)
+    // the running last-bin marker the NEXT increment's binBase reads;
+    // an empty shipment consumes no bins: next_bin stays at binBase
+    val nextBin = if (shTot.isNullAt(4)) binBase else shTot.getLong(4) + 1L
     import s.implicits._
-    Sources.overwriteBatch(Seq((shTot.getLong(4) + 1L, incId)).toDF("next_bin", "batch"),
-      s"$prev/nextbin")
-    // shipped media rides with the shipped docs (the full build's
-    // corpus-dir convention): the increment's own corpus dir is
-    // itself multimodal
-    if (hasMedia(s, in))
-      s.read.parquet(Tables.rawPath(in, "media"))
-        .join(shipped.select("doc_id"), "doc_id")
-        .select("doc_id", "payload")
-        .write.mode(SaveMode.Overwrite).parquet(s"$out/corpus/media.parquet")
+    Sources.overwriteBatch(Seq((nextBin, incId)).toDF("next_bin", "batch"), s"$prev/nextbin")
     decisions += ((8, "pack", keep.count(), shTot.getLong(3),
       s"bins=${shTot.getLong(2)} bin_base=$binBase"))
     decisions += ((9, "shards", shTot.getLong(3), shTot.getLong(1),

@@ -804,23 +804,16 @@ object Sampling {
     * two actions (histogram + admission join) — without the barrier
     * the cluster computation would execute twice. */
   def q75(s: SparkSession, dir: String): DataFrame =
-    assembleCore(s, dir, q68(s, dir).filter(col("split") === "train").select("doc_id"))
+    assembleKept(s, dir, q68(s, dir).filter(col("split") === "train").select("doc_id"))
 
   /** q75 with the decontamination stage composed in: gate-kept train
     * docs MINUS `drop` (q69/q86 flags) feed the mixture — the
     * [[graft.BuildCorpus]] assembly point. q75 itself passes the gate
     * set through unchanged, so its plan (and oracle) is untouched. */
   private[graft] def assembleWith(s: SparkSession, dir: String, drop: DataFrame): DataFrame =
-    assembleCore(s, dir,
+    assembleKept(s, dir,
       q68(s, dir).filter(col("split") === "train").select("doc_id")
         .join(drop, Seq("doc_id"), "left_anti"))
-
-  /** [[assembleWith]] over an ALREADY-COMPUTED keep frame — the
-    * BuildCorpus path, which has the q68 gate checkpointed from its
-    * own gate stage and must not pay the composed gate legs a second
-    * time (r8 review finding). */
-  private[graft] def assembleKept(s: SparkSession, dir: String, keep: DataFrame): DataFrame =
-    assembleCore(s, dir, keep)
 
   /** q74's packing core over an explicit keep frame with a bin-id
     * BASE offset — the INCREMENTAL-build path: an increment packs
@@ -837,7 +830,12 @@ object Sampling {
       .withColumn("bin_id", col("bin_id") + lit(binBase))
       .orderBy("doc_id")
 
-  private def assembleCore(s: SparkSession, dir: String, keep: DataFrame): DataFrame = {
+  /** q72's mixture admission + q74's packing over an explicit keep
+    * frame — q75 and [[assembleWith]] pass their gate sets; the
+    * BuildCorpus path passes an ALREADY-COMPUTED keep frame, since it
+    * has the q68 gate checkpointed from its own gate stage and must
+    * not pay the composed gate legs a second time (r8 review finding). */
+  private[graft] def assembleKept(s: SparkSession, dir: String, keep: DataFrame): DataFrame = {
     val d = Tables(s, dir, "documents")
       .select(col("doc_id"), col("lang"), expr(BucketExpr).as("bucket"),
         expr(s"size(${Dedup.tokensExpr})").cast("long").as("n_tokens"))

@@ -218,8 +218,15 @@ class BuildCorpusSpec extends AnyFunSuite {
       // GenData media mode: real PNGs at id%3==0 with planted twin /
       // chain families, stub blobs (jpeg stub class), real WAVs
       GenData.generate(spark, in, 400, 100, None, 0.3, "salad", Some(300))
-      val log = BuildCorpus.run(spark, in, out).collect()
-        .map(r => r.getString(1) -> ((r.getLong(2), r.getLong(3)))).toMap
+      val rows = BuildCorpus.run(spark, in, out).collect()
+      val log = rows.map(r => r.getString(1) -> ((r.getLong(2), r.getLong(3)))).toMap
+      assert(rows.map(r => (r.getInt(0), r.getString(1))).toSeq == Seq(
+        0 -> "intake", 1 -> "normalize", 2 -> "embedding_route", 3 -> "semantic_decon",
+        4 -> "gate_keep", 5 -> "decontaminate", 6 -> "media_gate", 7 -> "image_families",
+        8 -> "mix_pack", 9 -> "shards", 10 -> "dup_index"), "base ledger stage sequence")
+      val famDetail = rows.find(_.getString(1) == "image_families").get.getString(4)
+      assert(!famDetail.contains("resident_dups="),
+        s"the base build has no resident images: $famDetail")
 
       // ---- the gate, recomputed stepwise over the same inputs ----
       val pl = spark.read.parquet(s"$in/media.parquet")
@@ -587,8 +594,17 @@ class BuildCorpusSpec extends AnyFunSuite {
         .withColumn("n_chars", length(col("text")).cast("long"))
         .write.parquet(s"$in1/documents.parquet")
       media1.toDF("doc_id", "payload").write.parquet(s"$in1/media.parquet")
-      val log1 = BuildCorpus.incremental(spark, in1, prev, out1, incId = 1L)
-        .collect().map(r => r.getString(1) -> ((r.getLong(2), r.getLong(3), r.getString(4)))).toMap
+      val rows1 = BuildCorpus.incremental(spark, in1, prev, out1, incId = 1L).collect()
+      val log1 = rows1.map(r => r.getString(1) -> ((r.getLong(2), r.getLong(3), r.getString(4)))).toMap
+      assert(rows1.map(r => (r.getInt(0), r.getString(1))).toSeq == Seq(
+        0 -> "intake", 1 -> "normalize", 2 -> "exact_dup_vs_corpus", 3 -> "neardup_admission",
+        4 -> "gate_keep", 5 -> "decontaminate", 6 -> "media_gate", 7 -> "image_families",
+        8 -> "pack", 9 -> "shards", 10 -> "mixture_drift"), "increment ledger stage sequence")
+      // the gate row, recomputed from q68 over the increment's staged corpus
+      val gate1 = operators.Sampling.q68(spark, s"$out1/staged").localCheckpoint(false)
+      val nStaged1 = spark.read.parquet(s"$out1/staged/documents.parquet").count()
+      assert(log1("gate_keep") == ((nStaged1, gate1.filter(col("split") === "train").count(),
+        s"q68 kept_all_splits=${gate1.count()}")), s"gate_keep row: ${log1("gate_keep")}")
 
       // gate: A-D admitted (twins carry valid headers + good captions),
       // E fails on dims; families: A drops as a RESIDENT dup, D as the
