@@ -100,6 +100,12 @@ object BuildCorpus {
       buf += ((row._1, row._2, row._3, row._4, row._5, secs))
       t0 = System.nanoTime()
     }
+    /** Set n_out of an appended row whose count rides a LATER job
+      * (the increment's step-5 tally), keeping the row's own wall. */
+    def fill(id: Int, nOut: Long): Unit = {
+      val i = buf.indexWhere(_._1 == id)
+      buf(i) = buf(i).copy(_4 = nOut)
+    }
     def rows: Seq[(Int, String, Long, Long, String, Double)] = buf.toSeq
   }
 
@@ -709,7 +715,8 @@ object BuildCorpus {
       .select(col("doc_id"), md5(col("text").cast("binary")).as("h"))
       .join(priorMd5, Seq("h"), "left_semi")
       .select("doc_id").localCheckpoint(false)
-    decisions += ((2, "exact_dup_vs_corpus", nStaged, nStaged - exactDup.count(),
+    // n_out comes from the step-5 tally
+    decisions += ((2, "exact_dup_vs_corpus", nStaged, -1L,
       "md5 anti-join vs prev staged + prior increments"))
     // persist THIS increment's staged md5s for the next increment —
     // staged, not shipped (the dupindex-over-staged doctrine: novelty
@@ -727,13 +734,17 @@ object BuildCorpus {
     val verdicts = DupIndex.probe(s, s"$prev/dupindex", delta.select("doc_id", "text"),
         Some(s"$prev/dupdelta"), excludeBatch = Some(incId),
         preCapped = Some(capped))
-      .localCheckpoint(false) // 3 consumers: sink + novel + count
-    Sources.overwriteBatch(verdicts.withColumn("batch", lit(incId)), s"$out/verdicts")
+      .localCheckpoint(false) // 2 consumers: sink + novel
+    // the novel tally rides the verdict write (AdmitStream's rule)
+    val novelObs = new org.apache.spark.sql.Observation()
+    Sources.overwriteBatch(verdicts.withColumn("batch", lit(incId))
+      .observe(novelObs, count(when(col("verdict") === "novel", 1)).as("n")),
+      s"$out/verdicts")
     val novelIds = verdicts.filter(col("verdict") === "novel").select("doc_id")
     DupIndex.appendDelta(s, s"$prev/dupindex", s"$prev/dupdelta",
       delta.join(novelIds, Seq("doc_id"), "left_semi").select("doc_id", "text"), incId,
       preCapped = Some(capped))
-    decisions += ((3, "neardup_admission", nStaged, novelIds.count(),
+    decisions += ((3, "neardup_admission", nStaged, novelObs.get("n").asInstanceOf[Long],
       s"DupIndex.probe batch=$incId"))
 
     // 4. the intra-delta gate ([[gateStep]])
@@ -760,8 +771,16 @@ object BuildCorpus {
       .join(exactDup, Seq("doc_id"), "left_anti")
       .join(flagged, Seq("doc_id"), "left_anti")
       .localCheckpoint(false)
-    decisions += ((5, "decontaminate", nGateTrain, keep0.count(),
-      s"eval-slice grams flagged=${flagged.count()}"))
+    // rows 2 and 5 read ONE tally job (each eager count is a job
+    // launch); it also materializes the three checkpoints
+    def tagged(d: DataFrame, t: Int) = d.select(lit(t).as("t"))
+    def nOf(t: Int) = count(when(col("t") === t, 1))
+    val tally = tagged(exactDup, 0).unionByName(tagged(flagged, 1))
+      .unionByName(tagged(keep0, 2))
+      .agg(nOf(0), nOf(1), nOf(2)).collect()(0)
+    decisions.fill(2, nStaged - tally.getLong(0))
+    decisions += ((5, "decontaminate", nGateTrain, tally.getLong(2),
+      s"eval-slice grams flagged=${tally.getLong(1)}"))
 
     // 5m. media stages ([[mediaStages]], ledger ids 6/7 when the
     // increment ships media — mirroring the full build's gap pattern),
@@ -792,7 +811,9 @@ object BuildCorpus {
     val nextBin = if (shTot.isNullAt(4)) binBase else shTot.getLong(4) + 1L
     import s.implicits._
     Sources.overwriteBatch(Seq((nextBin, incId)).toDF("next_bin", "batch"), s"$prev/nextbin")
-    decisions += ((8, "pack", keep.count(), shTot.getLong(3),
+    // packing ships every kept doc (a prefix sum over keep's unique
+    // doc_ids drops none), so n_in is the shipped count
+    decisions += ((8, "pack", shTot.getLong(3), shTot.getLong(3),
       s"bins=${shTot.getLong(2)} bin_base=$binBase"))
     decisions += ((9, "shards", shTot.getLong(3), shTot.getLong(1),
       s"tokens=${shTot.getLong(0)} of_max_shards=${Sampling.NShards}"))

@@ -468,42 +468,27 @@ object Scenario {
     * bounded sample quantize the corpus as well as centroids fit on
     * everything (mse_ratio ≈ 1, the refit gate's statistic). */
   private def fit(spark: SparkSession, root: String, args: Seq[String]): Seq[Record] = {
-    import spark.implicits._
     val dir = args.headOption.getOrElse(sys.error("fit needs <dir>"))
     val runs = args.lift(1).map(_.toInt).getOrElse(1)
     val emb = Tables(spark, dir, "embeddings")
     val n = emb.count()
 
-    // mean ||v - cent(cid)||^2 over the full corpus (a double tree
-    // merge: diagnostic only, never oracle-compared)
-    def mse(cells: DataFrame, cents: Array[Array[Double]]): Double = {
-      val bc = spark.sparkContext.broadcast(cents)
-      val (s, c) = cells.select("cid", "ed").as[(Int, Seq[Float])]
-        .rdd.mapPartitions { it =>
-          val cs = bc.value
-          var acc = 0.0; var cnt = 0L
-          it.foreach { case (cid, v) =>
-            val cv = cs(cid)
-            val m = math.min(v.length, cv.length)
-            var d = 0.0; var i = 0
-            while (i < m) { val t = v(i) - cv(i); d += t * t; i += 1 }
-            acc += d; cnt += 1L
-          }
-          Iterator.single((acc, cnt))
-        }.reduce((a, b) => (a._1 + b._1, a._2 + b._2))
-      bc.unpersist()
-      s / math.max(1L, c)
+    // mean ||v - nearest centroid||^2 over the full corpus: the refit
+    // gate's statistic (Similarity.quantErrU's exact micro-unit sums)
+    def mse(cents: Array[Array[Double]]): Double = {
+      val (e, c) = sources.AnnIndex.errStatsU(spark, emb, cents)
+      e.toDouble / math.max(1L, c) / 1000000.0
     }
     // the fit is eager; count() forces the assignment pass. The fit is
     // deterministic, so the error is measured once, untimed, on the
-    // last run's cells.
+    // last run's centroids.
     def fitAt(fitFloor: Long): (Double, Double) = {
-      val (secs, (cells, cents)) = best(runs) {
-        val r = operators.Similarity.ivfCellsOf(spark, emb, None, fitFloor = fitFloor)
-        r._1.count()
-        r
+      val (secs, cents) = best(runs) {
+        val (cells, cents) = operators.Similarity.ivfCellsOf(spark, emb, None, fitFloor = fitFloor)
+        cells.count()
+        cents
       }
-      (secs, mse(cells, cents))
+      (secs, mse(cents))
     }
     val (fullS, fullE) = fitAt(Long.MaxValue)
     val (sampS, sampE) = fitAt(operators.Similarity.FitSampleFloor)

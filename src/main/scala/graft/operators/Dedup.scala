@@ -604,20 +604,13 @@ object Dedup {
       Array.fill(bd * bt)(Array.fill(64)(rnd.nextGaussian()))
     })
 
-  private[graft] def ndBandKeys(planes: Array[Array[Double]], arr: Array[Float]): Array[Long] =
-    ndBandKeysG(planes, arr, NdBits, NdBands)
-
   private[graft] def ndBandKeysG(planes: Array[Array[Double]], arr: Array[Float],
-      bits: Int, bands: Int): Array[Long] =
+      bits: Int = NdBits, bands: Int = NdBands): Array[Long] =
     Array.tabulate(bands) { band =>
       var key = 0L
       var b = 0
       while (b < bits) {
-        val p = planes(band * bits + b)
-        val m = math.min(arr.length, p.length)
-        var d = 0.0
-        var i = 0
-        while (i < m) { d += arr(i) * p(i); i += 1 }
+        val d = graft.functions.VectorOps.dot(arr, planes(band * bits + b))
         key = (key << 1) | (if (d >= 0) 1L else 0L)
         b += 1
       }

@@ -392,16 +392,16 @@ object MlOps {
     * fitting. KMeans membership is partitioning-dependent FP →
     * rows-only; MlOpsSpec checks the score's structure. */
   def q35(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.VectorOps.dotp
+    import graft.functions.VectorOps.{dotp, norms2}
     import org.apache.spark.ml.functions.vector_to_array
     val (clustered, centers) = kmeansRfm(s, dir)
     val farr = vector_to_array(col("features"))
+    val cn2 = norms2(centers)
     val d2 = centers.zipWithIndex.foldLeft(lit(Double.NaN)) {
       case (acc, (c, i)) =>
         val carr = array(c.map(lit): _*)
-        val cn2 = c.map(x => x * x).sum
         when(col("cluster") === i,
-          dotp(farr, farr) - lit(2.0) * dotp(farr, carr) + lit(cn2)).otherwise(acc)
+          dotp(farr, farr) - lit(2.0) * dotp(farr, carr) + lit(cn2(i))).otherwise(acc)
     }
     val dists = clustered
       .withColumn("dist", sqrt(greatest(d2, lit(0.0))))

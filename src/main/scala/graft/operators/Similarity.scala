@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over the embedding column (SURVEY §2.E).
@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   import graft.functions.TopK
-  import graft.functions.VectorOps.{dotp, l2norm}
+  import graft.functions.VectorOps.{dot, dotp, l2norm, nearest, norms2}
 
   /** Query-set contract shared by q50/q51/q52: vec_id < QueryMax.
     * The query side is bounded (broadcast/collect-safe) by design;
@@ -109,12 +109,7 @@ object Similarity {
     val sig = new Array[Long](SigWords)
     var b = 0
     while (b < SigBits) {
-      val p = planes(b)
-      val m = math.min(arr.length, p.length)
-      var d = 0.0
-      var i = 0
-      while (i < m) { d += arr(i) * p(i); i += 1 }
-      if (d >= 0) sig(b >> 6) |= 1L << (b & 63)
+      if (dot(arr, planes(b)) >= 0) sig(b >> 6) |= 1L << (b & 63)
       b += 1
     }
     sig
@@ -122,9 +117,8 @@ object Similarity {
 
   /** Binary-quantization ANN: one signature pass over the corpus
     * (mapPartitions, closed-over plane matrix — embarrassingly
-    * parallel, no shuffle), a bounded per-partition top-CandK
-    * hamming heap per query, a k-bounded global merge, then EXACT
-    * cosine rerank of the CandK survivors. The corpus is touched in
+    * parallel, no shuffle) scored by −hamming against each query's
+    * signature, then [[candidateTail]]. The corpus is touched in
     * full exactly once at 64 B/row compare cost; floats are read
     * only for the CandK×|Q| reranked rows. rows-only —
     * SimilaritySpec asserts recall ≥ 0.9 vs q50. */
@@ -138,43 +132,67 @@ object Similarity {
       .collect().sortBy(_._1)
       .map { case (id, v) => (id, sigOf(planes, v.toArray)) }
     val nq = qsigs.length
-    // per-partition bounded heaps: worst candidate on top, so a
-    // beaten worst is dequeued in O(log CandK); emits <= nq×CandK
-    // rows per partition regardless of partition size.
-    val cands = e.select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])]
-      .mapPartitions { it =>
-        val heaps = Array.fill(nq)(new scala.collection.mutable.PriorityQueue[(Int, Long)]())
-        it.foreach { case (id, v) =>
-          val sig = sigOf(planes, v.toArray)
-          var qi = 0
-          while (qi < nq) {
-            val (qid, qsig) = qsigs(qi)
-            if (id != qid) {
-              var h = 0
-              var w = 0
-              while (w < SigWords) { h += java.lang.Long.bitCount(sig(w) ^ qsig(w)); w += 1 }
-              val heap = heaps(qi)
-              if (heap.size < CandK) heap.enqueue((h, id))
-              else {
-                val worst = heap.head
-                if (h < worst._1 || (h == worst._1 && id < worst._2)) {
-                  heap.dequeue(); heap.enqueue((h, id))
-                }
+    val rows = e.select(col("vec_id"), col("embedding"), col("nrm")).as[(Long, Seq[Float], Double)]
+    candidateTail(s, e, qsigs.map(_._1), rows) { () => (r, sc) =>
+      val sig = sigOf(planes, r._2.toArray)
+      var qi = 0
+      while (qi < nq) {
+        val qsig = qsigs(qi)._2
+        var h = 0
+        var w = 0
+        while (w < SigWords) { h += java.lang.Long.bitCount(sig(w) ^ qsig(w)); w += 1 }
+        sc(qi) = -h.toDouble
+        qi += 1
+      }
+    }
+  }
+
+  /** The candidate tail shared by q51 and q53. Each partition keeps,
+    * per query, a bounded heap of its CandK best rows by (score desc,
+    * id asc) — worst on top, so a beaten worst is dequeued in
+    * O(log CandK) and a partition emits ≤ |Q|×CandK rows whatever
+    * its size. A k-bounded TopK merge picks the global CandK
+    * candidates, and an exact cosine rerank of those (the candidate
+    * list is tiny → broadcast; the corpus scan supplying the floats
+    * stays map-side) gives the top 5. `scorer` runs once per
+    * partition and returns the fill of one score per query for a
+    * (vec_id, embedding, nrm) row. */
+  private def candidateTail(s: SparkSession, e: DataFrame, qids: Array[Long],
+      rows: Dataset[(Long, Seq[Float], Double)])(
+      scorer: () => ((Long, Seq[Float], Double), Array[Double]) => Unit): DataFrame = {
+    import s.implicits._
+    val nq = qids.length
+    val cands = rows.mapPartitions { it =>
+      val fill = scorer()
+      val sc = new Array[Double](nq)
+      val heaps = Array.fill(nq)(new scala.collection.mutable.PriorityQueue[(Double, Long)]()(
+        Ordering.by { case (x, id) => (-x, id) }))
+      it.foreach { r =>
+        val id = r._1
+        fill(r, sc)
+        var qi = 0
+        while (qi < nq) {
+          if (id != qids(qi)) {
+            val x = sc(qi)
+            val heap = heaps(qi)
+            if (heap.size < CandK) heap.enqueue((x, id))
+            else {
+              val worst = heap.head
+              if (x > worst._1 || (x == worst._1 && id < worst._2)) {
+                heap.dequeue(); heap.enqueue((x, id))
               }
             }
-            qi += 1
           }
+          qi += 1
         }
-        heaps.iterator.zipWithIndex.flatMap { case (heap, qi) =>
-          heap.iterator.map { case (h, id) => (qsigs(qi)._1, id, h) }
-        }
-      }.toDF("query_id", "neighbor_id", "ham")
-    // global top-CandK per query (k-bounded merge of partition heaps)
+      }
+      heaps.iterator.zipWithIndex.flatMap { case (heap, qi) =>
+        heap.iterator.map { case (x, id) => (qids(qi), id, x) }
+      }
+    }.toDF("query_id", "neighbor_id", "score")
     val topC = cands.groupBy("query_id")
-      .agg(TopK.topk(CandK)(-col("ham").cast("double"), col("neighbor_id")).as("top"))
+      .agg(TopK.topk(CandK)(col("score"), col("neighbor_id")).as("top"))
       .select(col("query_id"), explode(col("top.id")).as("neighbor_id"))
-    // exact rerank: candidate list is tiny → broadcast; the corpus
-    // scan supplying the float vectors stays map-side.
     val q = e.filter(col("vec_id") < QueryMax)
       .select(col("vec_id").as("query_id"), col("ed").as("qe"), col("nrm").as("qn"))
     val scored = e.select(col("vec_id").as("neighbor_id"), col("ed").as("ce"), col("nrm").as("cn"))
@@ -203,15 +221,15 @@ object Similarity {
   /** Driver-side Lloyd on one subspace slice of the sample:
     * deterministic (init from the first PqK subvectors in vec_id
     * order, ties to the lowest centroid, means rounded to 1e-9). */
-  private def fitSubCodebook(sub: Array[Array[Double]]): Array[Array[Double]] = {
+  private def fitSubCodebook(sub: Array[Array[Float]]): Array[Array[Double]] = {
     val d = sub.head.length
-    var cents = Array.tabulate(PqK)(c => sub(c % sub.length).clone())
+    var cents = Array.tabulate(PqK)(c => sub(c % sub.length).map(_.toDouble))
     for (_ <- 1 to PqIters) {
       val sums = Array.fill(PqK)(new Array[Double](d))
       val cnts = new Array[Long](PqK)
       val cn2 = norms2(cents)
       sub.foreach { v =>
-        val c = argminD(v, cents, cn2)
+        val c = nearest(v, cents, cn2)
         var i = 0
         while (i < d) { sums(c)(i) += v(i); i += 1 }
         cnts(c) += 1L
@@ -224,32 +242,16 @@ object Similarity {
     cents
   }
 
-  private def argminD(v: Array[Double], cs: Array[Array[Double]], cn2: Array[Double]): Int = {
-    var best = 0
-    var bestD = Double.MaxValue
-    var c = 0
-    while (c < cs.length) {
-      val cv = cs(c)
-      var dp = 0.0
-      var i = 0
-      while (i < cv.length) { dp += v(i) * cv(i); i += 1 }
-      val d = cn2(c) - 2.0 * dp
-      if (d < bestD) { bestD = d; best = c }
-      c += 1
-    }
-    best
-  }
-
   /** Product-quantization ANN (the compressed-corpus scale path):
     * per-subspace codebooks from a bounded sample, corpus encoded to
     * PqM codes, queries scored by asymmetric distance computation —
     * a per-query lookup table of (query-subvector · centroid) partial
     * dots, so each corpus row costs PqM table adds instead of a
     * 64-float dot — exact norms kept per row so the approximate
-    * cosine uses the true denominator. Bounded per-partition top-CandK
-    * heaps (q51's ranking shape), k-bounded merge, exact rerank of
-    * the survivors. One shuffle-free corpus pass at 8 B/row compare
-    * cost; rows-only — SimilaritySpec asserts recall vs q50. */
+    * cosine uses the true denominator; the approximate cosine is the
+    * score of q51's [[candidateTail]]. One shuffle-free corpus pass at
+    * 8 B/row compare cost; rows-only — SimilaritySpec asserts recall
+    * vs q50. */
   def q53(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e = withNorm(Tables(s, dir, "embeddings"))
@@ -270,7 +272,7 @@ object Similarity {
       .filter { case (_, r) => r % step == 0L }
       .map { case ((id, v, _), _) => (id, v) }
       .collect().sortBy(_._1)
-      .map(_._2.toArray.map(_.toDouble))
+      .map(_._2.toArray)
     val dim = sample.head.length
     // non-empty subspaces covering every dimension: at most PqM
     // slices, the LAST one extended to dim so a non-divisible dim
@@ -283,132 +285,35 @@ object Similarity {
       fitSubCodebook(sample.map(_.slice(lo, hi)))
     }
     // queries: bounded set, driver-collected (q51 pattern)
-    val queries: Array[(Long, Array[Double], Double)] =
+    val queries: Array[(Long, Array[Float], Double)] =
       typed.filter(_._1 < QueryMax).collect().sortBy(_._1)
-        .map { case (id, v, nm) => (id, v.toArray.map(_.toDouble), nm) }
+        .map { case (id, v, nm) => (id, v.toArray, nm) }
     val nq = queries.length
+    val nSub = slices.length
     val bcBooks = s.sparkContext.broadcast(books)
-    val cands = typed.mapPartitions { it =>
+    candidateTail(s, e, queries.map(_._1), typed) { () =>
       val bks = bcBooks.value
       val subN2: Array[Array[Double]] = bks.map(norms2)
       // ADC tables: lut(q)(m)(c) = query_m · centroid_mc
-      val nSub = slices.length
       val lut = Array.tabulate(nq, nSub, PqK) { (qi, m, c) =>
-        val (lo, _) = slices(m)
-        val cv = bks(m)(c)
-        var dp = 0.0
-        var i = 0
-        while (i < cv.length) { dp += queries(qi)._2(lo + i) * cv(i); i += 1 }
-        dp
+        dot(queries(qi)._2, slices(m)._1, bks(m)(c))
       }
-      // worst candidate on top: min approx-cos, ties to the larger id
-      val heaps = Array.fill(nq)(new scala.collection.mutable.PriorityQueue[(Double, Long)]()(
-        Ordering.by { case (c, id) => (-c, id) }))
       val code = new Array[Int](nSub)
-      it.foreach { case (id, v, nrm) =>
-        val arr = v.toArray
+      (r, sc) => {
+        val arr = r._2.toArray
         var m = 0
-        while (m < nSub) {
-          val (lo, hi) = slices(m)
-          val cs = bks(m)
-          val cn2 = subN2(m)
-          var best = 0
-          var bestD = Double.MaxValue
-          var c = 0
-          while (c < cs.length) {
-            val cv = cs(c)
-            var dp = 0.0
-            var i = 0
-            while (i < cv.length && lo + i < hi) { dp += arr(lo + i) * cv(i); i += 1 }
-            val dd = cn2(c) - 2.0 * dp
-            if (dd < bestD) { bestD = dd; best = c }
-            c += 1
-          }
-          code(m) = best
-          m += 1
-        }
+        while (m < nSub) { code(m) = nearest(arr, slices(m)._1, bks(m), subN2(m)); m += 1 }
         var qi = 0
         while (qi < nq) {
-          val (qid, _, qn) = queries(qi)
-          if (id != qid) {
-            var dot = 0.0
-            var mm = 0
-            while (mm < nSub) { dot += lut(qi)(mm)(code(mm)); mm += 1 }
-            val cos = dot / (qn * nrm)
-            val heap = heaps(qi)
-            if (heap.size < CandK) heap.enqueue((cos, id))
-            else {
-              val worst = heap.head
-              if (cos > worst._1 || (cos == worst._1 && id < worst._2)) {
-                heap.dequeue(); heap.enqueue((cos, id))
-              }
-            }
-          }
+          var d = 0.0
+          var mm = 0
+          while (mm < nSub) { d += lut(qi)(mm)(code(mm)); mm += 1 }
+          sc(qi) = d / (queries(qi)._3 * r._3)
           qi += 1
         }
       }
-      heaps.iterator.zipWithIndex.flatMap { case (heap, qi) =>
-        heap.iterator.map { case (cos, id) => (queries(qi)._1, id, cos) }
-      }
-    }.toDF("query_id", "neighbor_id", "acos")
-    val topC = cands.groupBy("query_id")
-      .agg(TopK.topk(CandK)(col("acos"), col("neighbor_id")).as("top"))
-      .select(col("query_id"), explode(col("top.id")).as("neighbor_id"))
-    val q = e.filter(col("vec_id") < QueryMax)
-      .select(col("vec_id").as("query_id"), col("ed").as("qe"), col("nrm").as("qn"))
-    val scored = e.select(col("vec_id").as("neighbor_id"), col("ed").as("ce"), col("nrm").as("cn"))
-      .join(broadcast(topC), "neighbor_id")
-      .join(broadcast(q), "query_id")
-      .withColumn("cosine", ops.r6(dotp(col("qe"), col("ce")) / (col("qn") * col("cn"))))
-      .select("query_id", "neighbor_id", "cosine")
-    top5(scored)
-  }
-
-  // Ranking key: argmin over centroids of ||v-c||² ignores the
-  // constant ||v||² term → d = c·c − 2 v·c; ties to the lowest cid.
-  private def argmin(arr: Array[Float], cs: Array[Array[Double]], cn2: Array[Double]): Int = {
-    var best = 0
-    var bestD = Double.MaxValue
-    var c = 0
-    while (c < cs.length) {
-      val cv = cs(c)
-      val m = math.min(arr.length, cv.length)
-      var dp = 0.0
-      var i = 0
-      while (i < m) { dp += arr(i) * cv(i); i += 1 }
-      val d = cn2(c) - 2.0 * dp
-      if (d < bestD) { bestD = d; best = c }
-      c += 1
     }
-    best
   }
-  // (best, runner-up) cell by the same ranking key; strict < keeps
-  // ties at the lowest cid, so the pair is deterministic.
-  private def argmin2(arr: Array[Float], cs: Array[Array[Double]], cn2: Array[Double]): (Int, Int) = {
-    var b1 = 0
-    var d1 = Double.MaxValue
-    var b2 = 0
-    var d2 = Double.MaxValue
-    var c = 0
-    while (c < cs.length) {
-      val cv = cs(c)
-      val m = math.min(arr.length, cv.length)
-      var dp = 0.0
-      var i = 0
-      while (i < m) { dp += arr(i) * cv(i); i += 1 }
-      val d = cn2(c) - 2.0 * dp
-      if (d < d1) { b2 = b1; d2 = d1; b1 = c; d1 = d }
-      else if (c != b1 && d < d2) { b2 = c; d2 = d }
-      c += 1
-    }
-    (b1, b2)
-  }
-  private def norms2(cs: Array[Array[Double]]): Array[Double] =
-    cs.map { cv =>
-      var x = 0.0; var i = 0
-      while (i < cv.length) { x += cv(i) * cv(i); i += 1 }
-      x
-    }
 
   /** Lloyd-fit coarse cells shared by q52 (IVF probing) and
     * [[Dedup.q45]] (SemDeDup): k = ⌈√n⌉ cells, map-side argmin
@@ -580,7 +485,7 @@ object Similarity {
         val cnts = new scala.collection.mutable.HashMap[Int, Long]
         it.foreach { case (_, v, _) =>
           val arr = v.toArray
-          val cid = argmin(arr, cs, cn2)
+          val cid = nearest(arr, cs, cn2)
           val sm = sums.getOrElseUpdate(cid, new Array[Double](dim))
           val m = math.min(arr.length, dim)
           var i = 0
@@ -618,9 +523,10 @@ object Similarity {
     val cells = typed.mapPartitions { it =>
       val cs = bcF.value
       val cn2 = norms2(cs)
+      // (best, runner-up) cell; one centroid → cid2 = cid
       it.map { case (id, v, nrm) =>
-        val (c1, c2) = argmin2(v.toArray, cs, cn2)
-        (id, c1, c2, v, nrm)
+        val nn = nearest(v.toArray, cs, cn2, 2)
+        (id, nn(0), nn.last, v, nrm)
       }
     }.toDF("vec_id", "cid", "cid2", "ed", "nrm")
     (cells, cents)
@@ -643,15 +549,7 @@ object Similarity {
     val cn2 = norms2(cents)
     val probes = typed.filter(_._1 < QueryMax).collect().sortBy(_._1)
       .flatMap { case (qid, qv, qn) =>
-        val arr = qv.toArray
-        cents.indices.map { c =>
-          val cv = cents(c)
-          val m = math.min(arr.length, cv.length)
-          var dp = 0.0
-          var i = 0
-          while (i < m) { dp += arr(i) * cv(i); i += 1 }
-          (cn2(c) - 2.0 * dp, c)
-        }.sorted.take(nprobe).map { case (_, c) => (qid, qv, qn, c) }
+        nearest(qv.toArray, cents, cn2, nprobe).map(c => (qid, qv, qn, c))
       }.toSeq.toDF("query_id", "qe", "qn", "cid")
     val scored = cells.join(broadcast(probes), "cid")
       .filter(col("vec_id") =!= col("query_id"))
@@ -715,15 +613,7 @@ object Similarity {
         val cs = bc.value
         val cn2 = norms2(cs)
         it.flatMap { case (id, v, nrm) =>
-          val arr = v.toArray
-          cs.indices.map { c =>
-            val cv = cs(c)
-            val m = math.min(arr.length, cv.length)
-            var dp = 0.0
-            var i = 0
-            while (i < m) { dp += arr(i) * cv(i); i += 1 }
-            (cn2(c) - 2.0 * dp, c)
-          }.sorted.take(nprobe).map { case (_, c) => (id, v, nrm, c) }
+          nearest(v.toArray, cs, cn2, nprobe).map(c => (id, v, nrm, c))
         }
       }.toDF("query_id", "qe", "qn", "cid")
     // soft residency (q45's trick): every vector is indexed under its
@@ -1090,7 +980,7 @@ object Similarity {
     typed.mapPartitions { it =>
       val cs = bc.value
       val cn2 = norms2(cs)
-      it.map { case (id, v, nrm) => (id, argmin(v.toArray, cs, cn2), v, nrm) }
+      it.map { case (id, v, nrm) => (id, nearest(v.toArray, cs, cn2), v, nrm) }
     }.toDF("vec_id", "cid", "ed", "nrm")
   }
 
@@ -1110,13 +1000,8 @@ object Similarity {
       val cn2 = norms2(cs)
       it.map { case (id, v, nrm) =>
         val arr = v.toArray
-        val c = argmin(arr, cs, cn2)
-        val cv = cs(c)
-        val m = math.min(arr.length, cv.length)
-        var dp = 0.0
-        var i = 0
-        while (i < m) { dp += arr(i) * cv(i); i += 1 }
-        val d2 = nrm * nrm - 2.0 * dp + cn2(c)
+        val c = nearest(arr, cs, cn2)
+        val d2 = nrm * nrm - 2.0 * dot(arr, cs(c)) + cn2(c)
         (id, math.floor(d2 * 1000000.0 + 0.5).toLong)
       }
     }.toDF("vec_id", "err_u")

@@ -137,18 +137,11 @@ object AnnIndex {
       cents: Array[Array[Double]], queries: Array[(Long, Array[Float])],
       nprobe: Int): DataFrame = {
     import s.implicits._
-    import graft.functions.VectorOps.dotp
-    val cn2 = cents.map(c => c.map(x => x * x).sum)
+    import graft.functions.VectorOps.{dot, dotp, nearest, norms2}
+    val cn2 = norms2(cents)
     val probes = queries.sortBy(_._1).flatMap { case (qid, qv) =>
-      val qn = math.sqrt(qv.map(x => x.toDouble * x).sum)
-      cents.indices.map { c =>
-        val cv = cents(c)
-        val m = math.min(qv.length, cv.length)
-        var dp = 0.0
-        var i = 0
-        while (i < m) { dp += qv(i) * cv(i); i += 1 }
-        (cn2(c) - 2.0 * dp, c)
-      }.sorted.take(nprobe).map { case (_, c) => (qid, qv.toSeq, qn, c) }
+      val qn = math.sqrt(dot(qv, qv))
+      nearest(qv, cents, cn2, nprobe).map(c => (qid, qv.toSeq, qn, c))
     }.toSeq.toDF("query_id", "qe", "qn", "cid")
     val cids = probes.select("cid").as[Int].collect().distinct.toSeq
     // the isin filter is a PARTITION filter on the cid directory

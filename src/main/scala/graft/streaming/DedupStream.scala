@@ -49,10 +49,12 @@ case class BucketStateT(docs: Seq[DocSigT])
   *    doc_id order, so the output set is replay-deterministic. */
 object DedupStream {
 
-  private[graft] val JaccThr = 0.6
+  private val JaccThrD = graft.operators.Dedup.JaccThr.toDouble
   private val Perms = 128
   private val Bands = 32
   private val RowsPerBand = Perms / Bands
+  /** Residents per (band, bucket) — shared by both online near-dup
+    * guards, this one and [[EmbedDedupStream]]. */
   private[graft] val BucketCap = 1024
 
   private def longHash(s: String, seed: Int): Long = {
@@ -115,7 +117,7 @@ object DedupStream {
   private def hitsAgainst(res: Seq[DocLike], id: Long, sh: Array[Long]): Seq[DupHit] =
     res.flatMap { r =>
       val j = jaccard(r.sh, sh)
-      if (j >= JaccThr)
+      if (j >= JaccThrD)
         Some(DupHit(math.min(r.id, id), math.max(r.id, id),
           math.floor(j * 1e6 + 0.5) / 1e6))
       else None

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import graft.functions.VectorOps.dot
 import graft.operators.Dedup
 import graft.sources.Sources
 
@@ -27,35 +28,30 @@ case class VecBucketStateT(docs: Seq[VecResT])
   * all-pairs.
   *
   * Geometry is IDENTICAL to q44 by construction — the same fixed
-  * plane matrix and band keys ([[Dedup.ndPlanes]]/[[Dedup.ndBandKeys]]),
-  * the same exact-cosine verification (sequential float-widened
-  * double accumulation, the arithmetic of the codegen'd DotProduct),
+  * plane matrix and band keys ([[Dedup.ndPlanes]]/[[Dedup.ndBandKeysG]]),
+  * the same exact-cosine verification (the array twin of the
+  * codegen'd DotProduct, [[graft.functions.VectorOps.dot]]),
   * the same threshold constant — so the emitted pair set equals the
   * batch operator's output exactly (StreamingSpec asserts set
   * equality, not recall). Same contracts as [[DedupStream]]:
   * at-least-once per shared bucket (consumers dedupe on the pair),
-  * [[BucketCap]] bounds ubiquitous-content buckets, in-batch
+  * [[DedupStream.BucketCap]] bounds ubiquitous-content buckets, in-batch
   * arrivals process in id order for replay determinism. State here
   * holds the raw vector per residency (NdBands× duplication) — the
   * online-LSH space/latency trade; [[neardupStreamTtl]] bounds it
   * by rate × ttl for unbounded streams. */
 object EmbedDedupStream {
 
-  private[graft] val BucketCap = 1024
   private val CosThrD = Dedup.CosThr.toDouble
 
   /** (band, key, id, raw floats, L2 norm) rows of one vector — the
     * ONE banding + norm computation both stream variants build on
-    * (norm = sqrt of the sequential float-widened self-dot, the
-    * batch l2norm arithmetic). */
+    * (norm = sqrt of the self-dot, the batch l2norm arithmetic). */
   private def banded(planes: Array[Array[Double]], id: Long, v: Seq[Float])
       : Seq[(Int, Long, Long, Array[Float], Double)] = {
     val arr = v.toArray
-    var n2 = 0.0
-    var i = 0
-    while (i < arr.length) { n2 += arr(i).toDouble * arr(i); i += 1 }
-    val nrm = math.sqrt(n2)
-    Dedup.ndBandKeys(planes, arr).zipWithIndex.map { case (k, band) =>
+    val nrm = math.sqrt(dot(arr, arr))
+    Dedup.ndBandKeysG(planes, arr).zipWithIndex.map { case (k, band) =>
       (band, k, id, arr, nrm)
     }.toSeq
   }
@@ -70,10 +66,7 @@ object EmbedDedupStream {
     res.flatMap { r =>
       if (r.v.length != arr.length) None // batch DotProduct yields NULL
       else {
-        var d = 0.0
-        var i = 0
-        while (i < arr.length) { d += r.v(i).toDouble * arr(i); i += 1 }
-        val cos = d / (r.nrm * nrm)
+        val cos = dot(r.v, arr) / (r.nrm * nrm)
         if (cos >= CosThrD)
           Some(CosHit(math.min(r.id, id), math.max(r.id, id),
             math.floor(cos * 1e4 + 0.5) / 1e4))
@@ -95,7 +88,7 @@ object EmbedDedupStream {
   /** TTL'd variant for unbounded vector streams, following
     * [[DedupStream.neardupStreamTtl]]'s contract verbatim: residents
     * older than `ttl` against the watermark are evicted before
-    * matching (freeing their [[BucketCap]] slot), idle buckets are
+    * matching (freeing their [[DedupStream.BucketCap]] slot), idle buckets are
     * removed by an event-time timeout, so state is bounded by
     * stream rate × ttl rather than corpus history — the knob that
     * makes an always-on embedding-ingest guard deployable. */
@@ -122,7 +115,7 @@ object EmbedDedupStream {
           val out = Seq.newBuilder[CosHit]
           if (!state.hasTimedOut) {
             rows.toSeq.sortBy(_._3).foreach { case (_, _, id, arr, nrm, ts) =>
-              if (res.size < BucketCap && !res.exists(_.id == id)) {
+              if (res.size < DedupStream.BucketCap && !res.exists(_.id == id)) {
                 out ++= hitsAgainst(res, id, arr, nrm)
                 res = res :+ VecResT(id, arr, nrm, ts.getTime)
               }
@@ -142,7 +135,7 @@ object EmbedDedupStream {
     * variants above run FIXED banding geometry, so a drifted or
     * cluster-structured stream would hit the same quadratic the x30
     * batch corpus did (bands·n²/2^bits candidate floor) — except
-    * online, where [[BucketCap]] silently CAPS the hot buckets and
+    * online, where [[DedupStream.BucketCap]] silently CAPS the hot buckets and
     * the operator quietly stops seeing most true pairs instead of
     * slowing down. This guard measures each trigger BEFORE it may
     * touch the matcher's state: the trigger's (band, bucket) counts
@@ -183,7 +176,7 @@ object EmbedDedupStream {
           val planes = Dedup.ndPlanes
           val keys = b.as[(Long, Seq[Float])].mapPartitions { it =>
             it.flatMap { case (_, v) =>
-              val ks = Dedup.ndBandKeys(planes, v.toArray)
+              val ks = Dedup.ndBandKeysG(planes, v.toArray)
               Iterator.tabulate(ks.length)(band => (band, ks(band)))
             }
           }.toDF("band", "bkey")
@@ -213,7 +206,7 @@ object EmbedDedupStream {
           var res = state.getOption.map(_.docs).getOrElse(Seq.empty)
           val out = Seq.newBuilder[CosHit]
           rows.toSeq.sortBy(_._3).foreach { case (_, _, id, arr, nrm) =>
-            if (res.size < BucketCap && !res.exists(_.id == id)) {
+            if (res.size < DedupStream.BucketCap && !res.exists(_.id == id)) {
               out ++= hitsAgainst(res, id, arr, nrm)
               res = res :+ VecRes(id, arr, nrm)
             }

@@ -322,7 +322,7 @@ class StreamingSpec extends AnyFunSuite {
       j <- (i + 1) until docs.length
       (ia, sa) = docs(i)
       (ib, sb) = docs(j)
-      if (bks(ia) & bks(ib)).nonEmpty && jac(sa, sb) >= DedupStream.JaccThr
+      if (bks(ia) & bks(ib)).nonEmpty && jac(sa, sb) >= operators.Dedup.JaccThr.toDouble
     } yield (math.min(ia, ib), math.max(ia, ib))).toSet
     assert(expected.nonEmpty, "no near-dup pairs at this SF: test is vacuous")
     assert(got == expected,
@@ -867,7 +867,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(hits == Set((1L, 2L), (3L, 4L)))
     // state plateaus at alive vectors' (band, key) buckets
     def keys(v: Seq[Float]) =
-      operators.Dedup.ndBandKeys(operators.Dedup.ndPlanes, v.toArray)
+      operators.Dedup.ndBandKeysG(operators.Dedup.ndPlanes, v.toArray)
         .zipWithIndex.map { case (k, b) => (b, k) }.toSet
     val alive = keys(base) ++ keys(u1) ++ keys(u2)
     val ever = alive ++ keys(d5)
